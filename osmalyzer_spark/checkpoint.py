@@ -80,6 +80,29 @@ def _read_value(spark: SparkSession, path: str) -> str:
     return rows[0]["value"]
 
 
+def _has_data_files(spark: SparkSession, path: str) -> bool:
+    """Whether `path` exists and holds a file the parquet reader would
+    read. Goes through the Hadoop FileSystem of the path, so it holds on
+    any Hadoop filesystem (hdfs://, s3a://, ...). Hidden names follow
+    Spark's file index: a leading '.', or a leading '_' without '='
+    (`__bucket=3` is a partition directory, `_SUCCESS` is metadata)."""
+    jvm = spark.sparkContext._jvm
+    root = jvm.org.apache.hadoop.fs.Path(path)
+    fs = root.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    if not fs.exists(root):
+        return False
+    prefix = fs.makeQualified(root).toUri().getPath().rstrip("/") + "/"
+    files = fs.listFiles(root, True)
+    while files.hasNext():
+        rel = files.next().getPath().toUri().getPath()[len(prefix):]
+        if not any(
+            part.startswith(".") or (part.startswith("_") and "=" not in part)
+            for part in rel.split("/")
+        ):
+            return True
+    return False
+
+
 @dataclass
 class CheckpointedRun:
     out_path: str
@@ -140,15 +163,16 @@ class CheckpointedRun:
         _write_value(spark, df.schema.json(), self._schema_path)
 
     def _read_data(self, spark: SparkSession) -> DataFrame:
-        try:
+        # only a missing or empty data directory means "zero rows ever
+        # written"; an unreadable one must fail, not read as no rows
+        if _has_data_files(spark, self._data_path):
             return spark.read.parquet(self._data_path)
-        except Exception:  # noqa: BLE001 — zero rows ever written
-            import json
+        import json
 
-            from pyspark.sql.types import StructType
+        from pyspark.sql.types import StructType
 
-            schema = StructType.fromJson(json.loads(_read_value(spark, self._schema_path)))
-            return spark.createDataFrame([], schema)
+        schema = StructType.fromJson(json.loads(_read_value(spark, self._schema_path)))
+        return spark.createDataFrame([], schema)
 
     def _result(self, spark: SparkSession) -> DataFrame:
         # only buckets with a progress row are part of the result: a data

@@ -85,7 +85,3 @@ def fuzzy_address_match(tag_street, tag_housenumber, fuzzy_address, tag_unit=Non
         ok = ok & unit_ok
     return F.coalesce(ok, F.lit(False))
 
-
-def extract_housenumbers(addr) -> Column:
-    """All `\\d+[a-z]?` tokens of a freeform address."""
-    return F.regexp_extract_all(F.lower(_c(addr)), F.lit(_HOUSENUM_RE))

@@ -26,10 +26,6 @@ def has_key(tags, key: str) -> Column:
     return F.coalesce(F.map_contains_key(_c(tags), F.lit(key)), F.lit(False))
 
 
-def has_any_key(tags, keys: list[str]) -> Column:
-    return F.exists(F.map_keys(_c(tags)), lambda k: k.isin(keys))
-
-
 def has_key_prefixed(tags, prefix: str) -> Column:
     return F.exists(F.map_keys(_c(tags)), lambda k: k.startswith(prefix))
 

@@ -123,17 +123,3 @@ def with_cell(
 ) -> DataFrame:
     """Attach the cell index column."""
     return df.withColumn(out, cell_id_expr(lat, lon, cell_deg))
-
-
-def with_neighbor_cells(
-    df: DataFrame,
-    cell_deg: float,
-    ring: int = 1,
-    lat: str = "lat",
-    lon: str = "lon",
-    out: str = "cell_id",
-) -> DataFrame:
-    """Explode each row into its (2*ring+1)^2 neighbor cells (probe side of
-    a radius join). Adds `out` = candidate cell id."""
-    center = cell_id_expr(lat, lon, cell_deg)
-    return df.withColumn(out, F.explode(neighbor_cells_expr(center, ring)))

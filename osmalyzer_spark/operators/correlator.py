@@ -43,6 +43,8 @@ import time
 from dataclasses import dataclass, field
 from typing import Callable
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -62,6 +64,12 @@ KIND_UNMATCHED_ITEM = "unmatched_item"
 KIND_UNMATCHED_OSM = "unmatched_osm"
 KIND_LONE_OSM = "lone_osm"
 KIND_OUTSIDE_BOUNDS = "outside_bounds"
+
+# distributed DA: re-checkpoint the accumulated holds union every this
+# many rounds (bounds plan depth)
+_HOLDS_CHECKPOINT_EVERY = 8
+# checkpointed correlate: star connected-components round cap
+_CC_MAX_ITER = 64
 
 
 @dataclass
@@ -171,6 +179,65 @@ def _no_binary(df: DataFrame, side: str) -> None:
             )
 
 
+def _gale_shapley(prop: np.ndarray, acc: np.ndarray, rank: np.ndarray) -> np.ndarray:
+    """The single-process deferred-acceptance kernel (round-parallel
+    McVitie-Wilson).
+
+    Rows are candidate pairs sorted by (proposer, proposer key) with
+    exact-key duplicates dropped. `prop` is an integer proposer code per
+    row, `acc` an integer acceptor code in [0, n) and `rank` the
+    acceptor's preference (lower wins, distinct within an acceptor).
+    Each round every free proposer proposes its next row, each acceptor
+    keeps the lowest rank among its holder and the new offers, and the
+    losers advance. With strict preferences the proposer-optimal stable
+    matching is unique, so this schedule holds exactly what a sequential
+    loop or the distributed rounds hold; disjoint components share no
+    codes, so one call over many components solves each of them.
+
+    Returns the held row indices, ascending.
+    """
+    n = len(prop)
+    if n == 0:
+        return np.empty(0, np.intp)
+    starts = np.flatnonzero(np.r_[True, prop[1:] != prop[:-1]])
+    ends = np.r_[starts[1:], n]
+    owner = np.repeat(np.arange(len(starts)), ends - starts)
+    held = np.full(int(acc.max()) + 1, -1, np.intp)
+    nxt = starts.copy()
+    free = np.arange(len(starts))
+    while True:
+        free = free[nxt[free] < ends[free]]
+        if len(free) == 0:
+            break
+        offers = nxt[free]
+        nxt[free] += 1
+        holders = held[np.unique(acc[offers])]
+        rows = np.concatenate([offers, holders[holders >= 0]])
+        rows = rows[np.lexsort((rank[rows], acc[rows]))]
+        a = acc[rows]
+        best = np.r_[True, a[1:] != a[:-1]]
+        held[a[best]] = rows[best]
+        free = owner[rows[~best]]
+    return np.sort(held[held >= 0])
+
+
+def _da_holds(prop, pkey: tuple, acc, akey: tuple, payload) -> np.ndarray:
+    """Deferred acceptance over parallel integer/float arrays: proposers
+    walk ascending `pkey` (then `payload`, which only picks among
+    exact-key duplicates, as the distributed watermark walk does) and
+    acceptors prefer ascending `akey`. `acc` must be dense codes.
+    Returns the held positions in the given arrays."""
+    walk = [prop, *pkey]
+    order = np.lexsort([payload] + walk[::-1])
+    if len(order) == 0:
+        return order
+    keys = [k[order] for k in walk]
+    order = order[np.r_[True, np.any([k[1:] != k[:-1] for k in keys], axis=0)]]
+    rank = np.empty(len(order), np.intp)
+    rank[np.lexsort([k[order] for k in akey[::-1]])] = np.arange(len(order))
+    return order[_gale_shapley(prop[order], acc[order], rank)]
+
+
 def _local_da(
     spark: SparkSession,
     cand: DataFrame,
@@ -197,10 +264,8 @@ def _local_da(
     latency. Beyond the gate the distributed loop runs unchanged.
     """
     data_cols = list(cand.columns)
-    n_p = len(proposer_order)
-    n_a = len(acceptor_order)
-    pcols = [f"__p{i}" for i in range(n_p)]
-    acols = [f"__a{i}" for i in range(n_a)]
+    pcols = [f"__p{i}" for i in range(len(proposer_order))]
+    acols = [f"__a{i}" for i in range(len(acceptor_order))]
     # key COMPONENTS as flat scalar columns — struct columns would arrive
     # in pandas as per-row dicts, an order-of-magnitude slower conversion
     sel = cand.select(
@@ -222,47 +287,14 @@ def _local_da(
     # the rest); after this, pkeys are strictly ascending within a group
     pdf = pdf.drop_duplicates(subset=[proposer] + pcols, keep="first")
     pdf = pdf.reset_index(drop=True)
-
-    n = len(pdf)
-    prop = pdf[proposer].tolist()
-    acc = pdf[acceptor].tolist()
-    acomp = [pdf[c].tolist() for c in acols + apay_cols]
-
-    # contiguous [start, end) ranges per proposer (sorted => grouped)
-    bounds = []
-    i = 0
-    while i < n:
-        j = i + 1
-        while j < n and prop[j] == prop[i]:
-            j += 1
-        bounds.append((i, j))
-        i = j
-
-    def akey(i):
-        # acceptance order = distributed min(struct(akey, payload))
-        return tuple(c[i] for c in acomp)
-
-    hold: dict = {}  # acceptor -> (acc_key, bound_idx, row_idx)
-    ptr = [s for s, _ in bounds]
-    ends = [e for _, e in bounds]
-    stack = list(range(len(bounds)))
-    while stack:
-        b = stack.pop()
-        i = ptr[b]
-        e = ends[b]
-        while i < e:
-            aid = acc[i]
-            ak = akey(i)
-            i += 1
-            cur = hold.get(aid)
-            if cur is None or ak < cur[0]:
-                if cur is not None:
-                    stack.append(cur[1])
-                hold[aid] = (ak, b, i - 1)
-                break
-        ptr[b] = i
-
-    held = sorted(v[2] for v in hold.values())
+    # acceptance order = distributed min(struct(akey, payload))
+    rank = np.empty(len(pdf), np.intp)
+    rank[pdf.sort_values(acols + apay_cols, kind="mergesort").index] = np.arange(len(pdf))
+    held = _gale_shapley(
+        pd.factorize(pdf[proposer], use_na_sentinel=False)[0],
+        pd.factorize(pdf[acceptor], use_na_sentinel=False)[0],
+        rank,
+    )
     out_pdf = pdf.iloc[held][data_cols]
     if len(out_pdf) == 0:
         return spark.createDataFrame([], cand.schema)
@@ -277,7 +309,6 @@ def deferred_acceptance(
     proposer_order: list[Column],
     acceptor_order: list[Column],
     max_rounds: int = 64,
-    checkpoint_every: int = 8,
     broadcast_row_limit: int = 1_000_000,
     local_pair_threshold: int = 300_000,
 ) -> tuple[DataFrame, int]:
@@ -308,8 +339,9 @@ def deferred_acceptance(
     displaced-holder set.
 
     Lineage: each round's proposal slice and winners are checkpointed
-    once; the full holds union re-checkpoints every `checkpoint_every`
-    rounds, bounding plan depth and per-round materialization.
+    once; the full holds union re-checkpoints every
+    `_HOLDS_CHECKPOINT_EVERY` rounds, bounding plan depth and per-round
+    materialization.
     """
     # keys are computed ON THE FLY (cheap expressions) — materializing
     # them into the checkpointed candidate table costs real bytes at 10^8
@@ -366,19 +398,12 @@ def deferred_acceptance(
         return F.broadcast(df) if n_rows <= broadcast_row_limit else df
 
     holds = spark.createDataFrame([], cand.schema)
-    # the big candidate table is immutable after round 0; per-round state
-    # is only the SMALL unassigned-proposer watermark table, so later
-    # rounds (displacement-chain tails) stay cheap no matter how large the
-    # candidate set is
-    unassigned = None  # round 1: every proposer proposes — no join needed
-    n_unassigned = 0
-    rounds = 0
     orig_sp = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(state_parts))
     try:
         holds, rounds = _da_rounds(
             spark, cand, holds, proposer, acceptor, pkey, akey, best_by,
-            hinted, max_rounds, checkpoint_every, state_parts, cand_parts,
+            hinted, max_rounds, state_parts, cand_parts,
         )
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", orig_sp)
@@ -387,11 +412,15 @@ def deferred_acceptance(
 
 def _da_rounds(
     spark, cand, holds, proposer, acceptor, pkey, akey, best_by, hinted,
-    max_rounds, checkpoint_every, state_parts, cand_parts,
+    max_rounds, state_parts, cand_parts,
 ):
     """The deferred-acceptance round loop (shuffle partitions pinned to
-    `state_parts` by the caller for the duration)."""
-    unassigned = None
+    `state_parts` by the caller for the duration). The big candidate
+    table is immutable after round 0; per-round state is only the SMALL
+    unassigned-proposer watermark table, so later rounds
+    (displacement-chain tails) stay cheap no matter how large the
+    candidate set is."""
+    unassigned = None  # round 1: every proposer proposes — no join needed
     n_unassigned = 0
     rounds = 0
     for rounds in range(1, max_rounds + 1):
@@ -440,7 +469,7 @@ def _da_rounds(
             .select(proposer, pkey.alias("__lost"))
         )
         holds = untouched.unionByName(winners)
-        if rounds % checkpoint_every == 0:
+        if rounds % _HOLDS_CHECKPOINT_EVERY == 0:
             # unions accumulate ~state_parts partitions per round; narrow
             # back to data-sized parallelism at the periodic checkpoint
             holds = holds.coalesce(max(state_parts, cand_parts)).localCheckpoint(
@@ -506,7 +535,7 @@ def _slim_inputs(
                 (unmatch_distance) instead of the declared maximum.
 
     Everything downstream (distributed DA, the checkpointed component
-    decomposition, the sequential small-component solver) consumes only
+    decomposition, the vectorized small-component solver) consumes only
     these — no caller Column expression survives past this point, which is
     what lets a pandas task replay a component exactly.
     """
@@ -748,22 +777,24 @@ def _assign(
 
 
 def _make_component_solver(p: CorrelatorParams):
-    """Sequential per-component solver for applyInPandas: replays the
-    reference's matching loop (Correlator.cs:110-301) inside ONE Arrow
-    task over the slim component rows ('e'/'i'/'p' sides). With strict
-    preferences, Gale-Shapley's proposer-optimal matching is unique and
-    order-independent, so this produces EXACTLY the distributed DA answer
-    for its component (randomized equivalence tests assert it).
+    """Small-component solver for applyInPandas: maps one Arrow group of
+    slim component rows ('e'/'i'/'p' sides, many whole components) to
+    its correlation rows with whole-array code — the forward DA, the
+    reverse pass and the strong-match lone upgrade (Correlator.cs:110-301)
+    are each one pass over the group. Components share no ids, so one
+    `_gale_shapley` call over the group solves every component in it,
+    and by matching uniqueness the answer is EXACTLY the distributed DA
+    answer (randomized equivalence tests assert it).
 
     Only plain scalars are captured — the caller's Column expressions were
     already evaluated into __lone / __outside / strength by _slim_inputs.
     """
-    import pandas as pd
-
     match_d = p.match_distance
-    unmatch_d = p.unmatch_distance
-    good_all = p.unmatch_distance + p.good_extra_distance
-    strong_all = p.unmatch_distance + p.strong_extra_distance
+    allowed = (
+        p.unmatch_distance,
+        p.unmatch_distance + p.good_extra_distance,
+        p.unmatch_distance + p.strong_extra_distance,
+    )
     upgrade_on = p.lone_strong_match_strength is not None and p.strength_expr is not None
     lone_min = p.lone_strong_match_strength
     up_radius = (
@@ -774,117 +805,75 @@ def _make_component_solver(p: CorrelatorParams):
     if upgrade_on and lone_min < REGULAR:
         raise ValueError("lone_strong_match_strength must be >= REGULAR")
 
-    cols = ["kind", "osm_id", "item_id", "distance", "strength", "far", "__bucket"]
+    def solve(pdf: pd.DataFrame) -> pd.DataFrame:
+        side = pdf["__side"].to_numpy()
+        is_e, is_i = side == "e", side == "i"
+        # dense codes in id order: acceptor codes and the id tie-breaks
+        ic = pd.factorize(pdf["item_id"], sort=True)[0]
+        ec = pd.factorize(pdf["elem_id"], sort=True)[0]
+        pr = np.flatnonzero(side == "p")
+        pi, pe = ic[pr], ec[pr]
+        s = pdf["strength"].to_numpy()[pr].astype(np.int64)
+        d = pdf["dist_m"].to_numpy()[pr].astype(np.float64)
 
-    def allowed(s: int) -> float:
-        if s == REGULAR:
-            return unmatch_d
-        if s == GOOD:
-            return good_all
-        return strong_all
-
-    def galeshapley(cand: dict, acceptor_key) -> dict:
-        """cand: proposer -> candidate list sorted ascending by the
-        proposer's preference key; returns acceptor -> (s, d, proposer)."""
-        hold: dict = {}
-        ptr = {k: 0 for k in cand}
-        stack = list(cand)
-        while stack:
-            pid = stack.pop()
-            lst = cand[pid]
-            while ptr[pid] < len(lst):
-                entry = lst[ptr[pid]]
-                ptr[pid] += 1
-                d, aid, s = entry[-3], entry[-2], entry[-1]
-                cur = hold.get(aid)
-                if cur is None or acceptor_key(s, d, pid) < acceptor_key(*cur):
-                    if cur is not None:
-                        stack.append(cur[2])
-                    hold[aid] = (s, d, pid)
-                    break
-        return hold
-
-    def solve_rows(bucket, lone_flag, item_ids, pairs_list):
-        """Pure-Python component solve over native rows: lone_flag is
-        {elem_id: bool}, item_ids a list, pairs_list [(iid, eid, s, d)].
-        Returns output tuples (no pandas — the task-level batch wrapper
-        converts ONCE per Arrow task, not once per component)."""
         # forward: items propose by (dist, elem_id); elements accept by
         # (strength desc, dist, item_id)
-        fwd: dict = {}
-        for iid, eid, s, d in pairs_list:
-            if d <= allowed(s):
-                fwd.setdefault(iid, []).append((d, eid, s))
-        for lst in fwd.values():
-            lst.sort()
-        hold = galeshapley(fwd, lambda s, d, iid: (-s, d, iid))
-
-        matched_items = {v[2] for v in hold.values()}
-        un_items = [iid for iid in item_ids if iid not in matched_items]
-        lone_elems = [
-            eid for eid, lf in lone_flag.items() if eid not in hold and lf
-        ]
-        plain_un = [
-            eid for eid, lf in lone_flag.items() if eid not in hold and not lf
+        fwd = np.flatnonzero(
+            d <= np.select([s == REGULAR, s == GOOD], allowed[:2], allowed[2])
+        )
+        held = fwd[
+            _da_holds(pi[fwd], (d[fwd], pe[fwd]), pe[fwd],
+                      (-s[fwd], d[fwd], pi[fwd]), payload=s[fwd])
         ]
 
-        upgrades: dict = {}
-        if upgrade_on and lone_elems and un_items:
-            lone_set, un_set = set(lone_elems), set(un_items)
+        # reverse pass: unmatched items, lone / plain unmatched elements
+        un_item = is_i & ~np.isin(ic, pi[held])
+        free_elem = is_e & ~np.isin(ec, pe[held])
+        lone_flag = pdf["__lone"].eq(True).to_numpy()
+        plain = free_elem & ~lone_flag
+        lone = free_elem & lone_flag
+        if upgrade_on:
             # elements propose by (strength desc, dist, item_id); items
             # accept by (strength desc, dist, elem_id)
-            rev: dict = {}
-            for iid, eid, s, d in pairs_list:
-                if (
-                    eid in lone_set
-                    and iid in un_set
-                    and s >= lone_min
-                    and d <= up_radius
-                ):
-                    rev.setdefault(eid, []).append((-s, d, iid, s))
-            for lst in rev.values():
-                lst.sort()
-            uhold = galeshapley(rev, lambda s, d, eid: (-s, d, eid))
-            for iid, (s, d, eid) in uhold.items():
-                upgrades[eid] = (s, d, iid)
-            lone_elems = [eid for eid in lone_elems if eid not in upgrades]
-            un_items = [iid for iid in un_items if iid not in uhold]
-
-        out = []
-        for eid, (s, d, iid) in list(hold.items()) + list(upgrades.items()):
-            far = d > match_d
-            out.append(
-                (KIND_MATCHED_FAR if far else KIND_MATCHED, eid, iid, d, s, far, bucket)
+            up = np.flatnonzero(
+                np.isin(pe, ec[lone]) & np.isin(pi, ic[un_item])
+                & (s >= lone_min) & (d <= up_radius)
             )
-        out.extend((KIND_UNMATCHED_ITEM, None, iid, None, None, None, bucket) for iid in un_items)
-        out.extend((KIND_UNMATCHED_OSM, eid, None, None, None, None, bucket) for eid in plain_un)
-        out.extend((KIND_LONE_OSM, eid, None, None, None, None, bucket) for eid in lone_elems)
-        return out
+            ups = up[
+                _da_holds(pe[up], (-s[up], d[up], pi[up]), pi[up],
+                          (-s[up], d[up], pe[up]), payload=pi[up])
+            ]
+            lone &= ~np.isin(ec, pe[ups])
+            un_item &= ~np.isin(ic, pi[ups])
+            held = np.r_[held, ups]
 
-    def solve(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        bucket = int(pdf["__bucket"].iloc[0])
-        e = pdf[pdf["__side"] == "e"]
-        i = pdf[pdf["__side"] == "i"]
-        pr = pdf[pdf["__side"] == "p"]
-        lone_flag = {
-            int(eid): bool(lf)
-            for eid, lf in zip(e["elem_id"].tolist(), e["__lone"].tolist())
-        }
-        item_ids = i["item_id"].tolist()
-        pairs_list = [
-            (iid, int(eid), int(s), float(d))
-            for iid, eid, s, d in zip(
-                pr["item_id"].tolist(),
-                pr["elem_id"].tolist(),
-                pr["strength"].tolist(),
-                pr["dist_m"].tolist(),
-            )
-        ]
-        out = solve_rows(bucket, lone_flag, item_ids, pairs_list)
-        return pd.DataFrame(out, columns=cols)
+        # 'p' rows carry both ids, 'i' rows only item_id and 'e' rows
+        # only elem_id: each output row reads its ids, distance, strength
+        # and bucket straight off its source row
+        rows = np.concatenate([
+            pr[held], np.flatnonzero(un_item), np.flatnonzero(plain),
+            np.flatnonzero(lone),
+        ])
+        far_m = d[held] > match_d
+        far = np.full(len(rows), None, dtype=object)
+        far[: len(held)] = far_m
+        kind = np.concatenate([
+            np.where(far_m, KIND_MATCHED_FAR, KIND_MATCHED),
+            np.repeat(
+                [KIND_UNMATCHED_ITEM, KIND_UNMATCHED_OSM, KIND_LONE_OSM],
+                [un_item.sum(), plain.sum(), lone.sum()],
+            ),
+        ])
+        return pd.DataFrame({
+            "kind": kind,
+            "osm_id": pdf["elem_id"].to_numpy()[rows],
+            "item_id": pdf["item_id"].to_numpy()[rows],
+            "distance": pdf["dist_m"].to_numpy()[rows],
+            "strength": pdf["strength"].to_numpy()[rows],
+            "far": far,
+            "__bucket": pdf["__bucket"].to_numpy()[rows],
+        })
 
-    solve.solve_rows = solve_rows  # type: ignore[attr-defined]
-    solve.cols = cols  # type: ignore[attr-defined]
     return solve
 
 
@@ -907,9 +896,7 @@ def checkpointed_correlate(
     items: DataFrame,
     params: "CorrelatorParams | None",
     ck,
-    cc_max_iter: int = 64,
     small_component_max_pairs: int = 200_000,
-    solver_groups: int | None = None,
     input_snapshot: str = "",
     fail_after_batches: int | None = None,  # crash-simulation test hook (big phase)
     fail_small_before_progress: bool = False,  # crash-simulation hook (small phase)
@@ -928,8 +915,9 @@ def checkpointed_correlate(
     dense giant):
 
     - SMALL components (candidate pairs <= small_component_max_pairs) are
-      solved inside single Arrow tasks — groupBy(component).applyInPandas
-      replaying the reference's sequential loop — and written for ALL
+      solved inside single Arrow tasks — a grouped applyInPandas whose
+      one vectorized solver call covers every component of its group —
+      and written for ALL
       pending hash buckets in ONE single-pass job. Wall time no longer
       scales with component COUNT (VERDICT r3 item 1); candidate-less
       singletons don't even enter the grouped map (native expressions).
@@ -997,7 +985,7 @@ def checkpointed_correlate(
     cc_pair_counts: dict = {}
     comps = connected_components_star(
         edges,
-        max_iter=cc_max_iter,
+        max_iter=_CC_MAX_ITER,
         edge_count_bound=n_pairs_all,
         edge_counts_out=cc_pair_counts,
     ).localCheckpoint(eager=True)
@@ -1145,71 +1133,24 @@ def checkpointed_correlate(
         # MANY components per Arrow task: grouping by __comp directly costs
         # one JVM->Arrow->Python round-trip per component (tens of
         # thousands of ~20-node components, measured p50=20 in BENCH.md),
-        # so group by a hash of the component id instead and loop the
-        # sequential solver over components inside the task. Components
-        # never split across groups (hash of the whole id), so outputs are
+        # so group by a hash of the component id instead and solve every
+        # component of the group in one vectorized call. Components never
+        # split across groups (hash of the whole id), so outputs are
         # identical; per-task memory is O(small rows / groups), uniform by
-        # hash, and the group count scales with cluster parallelism.
-        # data-proportional group count: each group is ONE batch_solve
+        # hash. Data-proportional group count: each group is ONE solver
         # call (its own Arrow round-trip), so a fixed high count makes
         # small inputs pay ~1000 near-empty calls; target ~25k candidate
         # pairs per group, floored at 4x parallelism for wave balance
         # and capped so a group never exceeds the small-component bound
-        n_groups = (
-            solver_groups
-            if solver_groups is not None
-            else max(
-                spark.sparkContext.defaultParallelism * 4,
-                min(65536, -(-n_pairs_all // 25_000)),
-            )
+        n_groups = max(
+            spark.sparkContext.defaultParallelism * 4,
+            min(65536, -(-n_pairs_all // 25_000)),
         )
-
-        def batch_solve(pdf):
-            import pandas as _pd
-
-            # ONE C-level conversion per Arrow task, then a plain-Python
-            # component loop: per-component pandas slicing (3 boolean
-            # masks + a frame build x tens of thousands of ~20-row
-            # components) was a bigger tax than the matching itself
-            pdf = pdf.sort_values("__comp", kind="stable")
-            comps = pdf["__comp"].tolist()
-            sides = pdf["__side"].tolist()
-            eids = pdf["elem_id"].tolist()
-            lones = pdf["__lone"].tolist()
-            iids = pdf["item_id"].tolist()
-            strengths = pdf["strength"].tolist()
-            dists = pdf["dist_m"].tolist()
-            buckets = pdf["__bucket"].tolist()
-            solve_rows = solver.solve_rows
-            out_all = []
-            n = len(comps)
-            start = 0
-            for idx in range(1, n + 1):
-                if idx < n and comps[idx] == comps[start]:
-                    continue
-                lone_flag = {}
-                item_ids = []
-                pairs = []
-                for r in range(start, idx):
-                    sd = sides[r]
-                    if sd == "p":
-                        pairs.append(
-                            (iids[r], int(eids[r]), int(strengths[r]), dists[r])
-                        )
-                    elif sd == "e":
-                        lone_flag[int(eids[r])] = bool(lones[r])
-                    else:
-                        item_ids.append(iids[r])
-                out_all.extend(
-                    solve_rows(int(buckets[start]), lone_flag, item_ids, pairs)
-                )
-                start = idx
-            return _pd.DataFrame(out_all, columns=solver.cols)
 
         grouped = (
             sl.filter(~F.col("__single"))
             .groupBy(F.pmod(F.xxhash64("__comp"), F.lit(n_groups)).alias("__sg"))
-            .applyInPandas(batch_solve, _CORR_OUT_SCHEMA)
+            .applyInPandas(solver, _CORR_OUT_SCHEMA)
         )
         return se.unionByName(si).unionByName(grouped)
 

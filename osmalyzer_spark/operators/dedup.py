@@ -245,15 +245,6 @@ def minhash_dedup(
     return minhash_lsh_pairs(sigs, bands, threshold, num_hashes=num_hashes)
 
 
-def _md5_lower64(word: str) -> int:
-    """Lower 64 bits of md5, little-endian over digest bytes 8..16 —
-    bit-identical to DuckDB's md5_number_lower, so simhash fingerprints
-    are reproducible in plain SQL for oracle checks."""
-    import hashlib
-
-    return int.from_bytes(hashlib.md5(word.encode()).digest()[8:], "little")
-
-
 def simhash_fingerprints(
     df: DataFrame, id_col: str, text_col: str
 ) -> DataFrame:

@@ -8,11 +8,6 @@ exact distances. Pattern and parameters per analyzer:
   grocery, convenience} + brand substring on name/operator/brand;
   distances 100/300, Strong extra 700; exact fuzzy-address match => Strong
   else Good.
-- parcel lockers (ParcelLockerAnalyzer.cs:83-101): 100/200, Strong extra
-  500; same-operator => Strong, other-operator locker => Unmatched.
-- cultural monuments (CulturalMonumentsAnalyzer.cs:106-190): 30/300,
-  Strong extra 1200; strength ladder name/ref/heritage; lone allowance for
-  heritage-tagged elements; lone strong upgrade.
 - street-name grouping (StreetNameAnalyzer.cs): GroupByValues over
   addr:street (A1/A2 pattern).
 
@@ -27,13 +22,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from osmalyzer_spark.functions.address import fuzzy_address_match
-from osmalyzer_spark.functions.strings import brand_name_match, fuzzy_name_match
+from osmalyzer_spark.functions.strings import brand_name_match
 from osmalyzer_spark.functions.tags import get_value, has_any_value, has_key
 from osmalyzer_spark.operators.correlator import (
     GOOD,
-    REGULAR,
     STRONG,
-    UNMATCHED,
     CorrelationResult,
     CorrelatorParams,
     correlate,
@@ -83,45 +76,6 @@ def shop_analyzer(
     return correlate(spark, slim, items, params)
 
 
-def parcel_locker_analyzer(
-    spark: SparkSession,
-    elements: DataFrame,
-    items: DataFrame,
-    operator: str,
-    all_operators: list[str],
-) -> CorrelationResult:
-    """Parcel lockers (ParcelLockerAnalyzer.cs:83-101): an element tagged
-    with a DIFFERENT known operator is Unmatched; same operator (on
-    operator/brand/name) is Strong; untagged nearby is Good."""
-    lockers = elements.filter(has_any_value("tags", "amenity", ["parcel_locker"]))
-    slim = _slim_elements(lockers, ["operator", "brand", "name"])
-    others = [o for o in all_operators if o.lower() != operator.lower()]
-
-    def strength(df: DataFrame):
-        any_name = F.coalesce("elem_operator", "elem_brand", "elem_name")
-        is_mine = (
-            brand_name_match(F.col("elem_operator"), [operator])
-            | brand_name_match(F.col("elem_brand"), [operator])
-            | brand_name_match(F.col("elem_name"), [operator])
-        )
-        is_other = F.lit(False)
-        for o in others:
-            is_other = is_other | brand_name_match(any_name, [o])
-        return (
-            F.when(is_mine, F.lit(STRONG))
-            .when(is_other, F.lit(UNMATCHED))
-            .otherwise(F.lit(GOOD))
-        )
-
-    params = CorrelatorParams(
-        match_distance=100.0,
-        unmatch_distance=200.0,
-        strong_extra_distance=500.0,
-        strength_expr=strength,
-    )
-    return correlate(spark, slim, items, params)
-
-
 def mail_box_analyzer(
     spark: SparkSession,
     elements: DataFrame,
@@ -158,47 +112,6 @@ def mail_box_analyzer(
         unmatch_distance=200.0,
         strong_extra_distance=500.0,
         strength_expr=strength,
-    )
-    return correlate(spark, slim, items, params)
-
-
-def cultural_monument_analyzer(
-    spark: SparkSession,
-    elements: DataFrame,
-    items: DataFrame,
-) -> CorrelationResult:
-    """Cultural monuments (CulturalMonumentsAnalyzer.cs:106-190): ladder —
-    matching ref:LV:vkpai => Strong; fuzzy name match => Good; any
-    heritage tag => Regular; else Unmatched. Heritage-tagged elements may
-    stand alone (lone allowance) and upgrade on Strong."""
-    slim = _slim_elements(
-        elements.filter(has_key("tags", "heritage") | has_key("tags", "ref:LV:vkpai") | has_key("tags", "name")),
-        ["name", "heritage", "ref:LV:vkpai"],
-    )
-
-    def strength(df: DataFrame):
-        ref_match = (
-            F.col("elem_ref_LV_vkpai").isNotNull()
-            & F.col("item_ref").isNotNull()
-            & (F.col("elem_ref_LV_vkpai") == F.col("item_ref").cast("string"))
-        )
-        name_match = fuzzy_name_match(F.col("elem_name"), F.col("item_name"))
-        has_heritage = F.col("elem_heritage").isNotNull()
-        return (
-            F.when(ref_match, F.lit(STRONG))
-            .when(F.coalesce(name_match, F.lit(False)), F.lit(GOOD))
-            .when(has_heritage, F.lit(REGULAR))
-            .otherwise(F.lit(UNMATCHED))
-        )
-
-    params = CorrelatorParams(
-        match_distance=30.0,
-        unmatch_distance=300.0,
-        strong_extra_distance=1200.0,
-        strength_expr=strength,
-        lone_allowance_expr=lambda df: F.col("elem_heritage").isNotNull(),
-        lone_strong_match_strength=STRONG,
-        lone_upgrade_radius_m=5000.0,
     )
     return correlate(spark, slim, items, params)
 

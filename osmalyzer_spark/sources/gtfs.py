@@ -105,11 +105,6 @@ def read_gtfs_services(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def read_gtfs_trips(spark: SparkSession, path: str) -> DataFrame:
-    raw = spark.read.csv(path, header=True, multiLine=True, quote='"', escape='"')
-    return raw.select("trip_id", "route_id", "service_id")
-
-
 def read_gtfs_stop_times(spark: SparkSession, path: str) -> DataFrame:
     raw = spark.read.csv(path, header=True, multiLine=True, quote='"', escape='"')
     return raw.select(

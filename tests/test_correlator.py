@@ -290,6 +290,56 @@ def test_empty_sides(spark):
     assert [r["item_id"] for r in no_elems.unmatched_items.collect()] == ["a"]
 
 
+def _sequential_gale_shapley(prefs, acc_rank):
+    """Textbook sequential Gale-Shapley: prefs maps proposer -> acceptor
+    list in preference order, acc_rank maps (acceptor, proposer) -> rank
+    (lower wins). Returns {acceptor: proposer}."""
+    hold, nxt, stack = {}, dict.fromkeys(prefs, 0), list(prefs)
+    while stack:
+        q = stack.pop()
+        while nxt[q] < len(prefs[q]):
+            a = prefs[q][nxt[q]]
+            nxt[q] += 1
+            cur = hold.get(a)
+            if cur is None or acc_rank[a, q] < acc_rank[a, cur]:
+                hold[a] = q
+                if cur is not None:
+                    stack.append(cur)
+                break
+    return hold
+
+
+@pytest.mark.parametrize("seed", [0, 1, 2])
+def test_gale_shapley_kernel_matches_sequential(seed):
+    """The vectorized kernel, given many disjoint components in ONE call
+    (as the small-component solver gives it an Arrow group), holds exactly
+    the pairs a plain sequential Gale-Shapley holds on random strict
+    preferences. No Spark."""
+    from osmalyzer_spark.operators.correlator import _gale_shapley
+
+    rng = np.random.default_rng(seed)
+    prefs, acc_rank = {}, {}
+    n_p = n_a = 0
+    for _ in range(300):
+        cp, ca = int(rng.integers(1, 12)), int(rng.integers(1, 12))
+        for q in range(n_p, n_p + cp):
+            k = int(rng.integers(0, ca + 1))
+            prefs[q] = [n_a + int(a) for a in rng.permutation(ca)[:k]]
+        for a in range(n_a, n_a + ca):
+            for r, q in enumerate(rng.permutation(np.arange(n_p, n_p + cp))):
+                acc_rank[a, int(q)] = r
+        n_p, n_a = n_p + cp, n_a + ca
+    rows = [(q, a) for q in sorted(prefs) for a in prefs[q]]
+    prop = np.array([q for q, _ in rows])
+    acc = np.array([a for _, a in rows])
+    rank = np.array([acc_rank[a, q] for q, a in rows])
+    held = _gale_shapley(prop, acc, rank)
+    got = {int(acc[r]): int(prop[r]) for r in held}
+    assert len(got) == len(held)
+    assert got == _sequential_gale_shapley(prefs, acc_rank)
+    assert list(held) == sorted(held)
+
+
 def _corr_rows(df):
     return {
         (r["kind"], r["osm_id"], r["item_id"],
@@ -590,42 +640,57 @@ def test_da_gate_probe_overflow_runs_distributed(spark):
 
 
 def test_checkpointed_grouped_map_solver_full_semantics(spark, tmp_path):
-    """The sequential per-component solver (small phase) must reproduce
-    the distributed answer under the FULL parameter surface: strengths,
-    per-strength extra distances, lone allowance, and the strong-match
-    lone-upgrade pass — on a random scene dense enough for displacement
-    chains and contested elements."""
+    """The vectorized small-component solver must reproduce the global
+    answer under the FULL parameter surface: strengths, per-strength
+    extra distances, lone allowance, and the strong-match lone-upgrade
+    pass. ~100 dense clusters spaced far beyond the seek distance give
+    every Arrow group many components, each with contested elements and
+    displacement chains; Good pairs between 75 m and the 175 m seek
+    distance can only match through the lone upgrade."""
     from osmalyzer_spark.checkpoint import CheckpointedRun
-    from osmalyzer_spark.operators.correlator import checkpointed_correlate
+    from osmalyzer_spark.operators.correlator import (
+        KIND_LONE_OSM, KIND_MATCHED, KIND_MATCHED_FAR, KIND_UNMATCHED_ITEM,
+        KIND_UNMATCHED_OSM, checkpointed_correlate,
+    )
 
     rng = np.random.default_rng(77)
     tags = ["a", "b", "c", None]
-    elements = [
-        dict(
-            elem_id=i,
-            tag=tags[int(rng.integers(0, 4))],
-            **dict(zip(("lat", "lon"),
-                       at(float(rng.uniform(-300, 300)), float(rng.uniform(-300, 300))))),
-        )
-        for i in range(60)
-    ]
-    items = [
-        dict(
-            item_id=f"i{k:03d}",
-            tag=tags[int(rng.integers(0, 4))],
-            **dict(zip(("lat", "lon"),
-                       at(float(rng.uniform(-300, 300)), float(rng.uniform(-300, 300))))),
-        )
-        for k in range(50)
-    ]
+    elements, items = [], []
+    for c in range(100):
+        north, east = (c // 10) * 3000.0, (c % 10) * 3000.0
+        for _ in range(int(rng.integers(2, 8))):
+            elements.append(dict(
+                elem_id=len(elements),
+                tag=tags[int(rng.integers(0, 4))],
+                **dict(zip(("lat", "lon"), at(
+                    north + float(rng.uniform(-120, 120)),
+                    east + float(rng.uniform(-120, 120))))),
+            ))
+        for _ in range(int(rng.integers(2, 8))):
+            items.append(dict(
+                item_id=f"i{len(items):04d}",
+                tag=tags[int(rng.integers(0, 4))],
+                **dict(zip(("lat", "lon"), at(
+                    north + float(rng.uniform(-120, 120)),
+                    east + float(rng.uniform(-120, 120))))),
+            ))
     edf, idf = make_dfs(spark, elements, items)
+
+    def strength(df):
+        both = F.col("item_tag").isNotNull() & F.col("elem_tag").isNotNull()
+        return (
+            F.when(both & (F.col("item_tag") == F.col("elem_tag")), F.lit(STRONG))
+            .when(both, F.lit(GOOD))
+            .otherwise(F.lit(REGULAR))
+        )
+
     params = CorrelatorParams(
         match_distance=15,
         unmatch_distance=75,
         strong_extra_distance=100.0,
-        strength_expr=tag_strength_expr,
+        strength_expr=strength,
         lone_allowance_expr=lambda df: F.col("elem_tag").isNotNull(),
-        lone_strong_match_strength=STRONG,
+        lone_strong_match_strength=GOOD,
     )
     expected = _corr_rows(correlate(spark, edf, idf, params).correlations)
     ck = CheckpointedRun(str(tmp_path / "ckg"), run_id="g1", n_buckets=8)
@@ -633,3 +698,9 @@ def test_checkpointed_grouped_map_solver_full_semantics(spark, tmp_path):
     assert got == expected
     # every component went through the grouped-map small phase
     assert max(ck.done_buckets(spark)) < 8
+    # the scene exercises every kind, and the lone upgrade pass
+    assert {r[0] for r in got} == {
+        KIND_MATCHED, KIND_MATCHED_FAR, KIND_UNMATCHED_ITEM,
+        KIND_UNMATCHED_OSM, KIND_LONE_OSM,
+    }
+    assert any(r[4] == GOOD and r[3] > 75 for r in got)

@@ -164,3 +164,27 @@ def test_checkpoint_single_pass_crash_window_resume(spark, tmp_out):
     assert sorted(out.select("id").toPandas()["id"]) == list(range(1000))
     fresh = _process(_inp(spark).withColumn("__bucket", expr.cast("int"))).drop("__bucket")
     assert out.exceptAll(fresh).count() == 0 and fresh.exceptAll(out).count() == 0
+
+
+def test_checkpoint_corrupt_data_raises(spark, tmp_out):
+    """A data directory that exists but cannot be read must fail loudly:
+    reading it as "no rows" would drop buckets the progress table calls
+    done."""
+    import os
+
+    ck = CheckpointedRun(tmp_out, run_id="cd1", n_buckets=1)
+    ck.run_single_pass(spark, _inp(spark), _process, bucket_expr=F.lit(0))
+    data = os.path.join(tmp_out, "data")
+    parts = [
+        os.path.join(d, f)
+        for d, _, fs in os.walk(data)
+        for f in fs
+        if f.startswith("part-")
+    ]
+    assert len(parts) == 1, parts
+    with open(parts[0], "r+b") as fh:
+        fh.truncate(os.path.getsize(parts[0]) // 2)
+    with pytest.raises(Exception):
+        ck.run_single_pass(
+            spark, _inp(spark), _process, bucket_expr=F.lit(0)
+        ).collect()
