@@ -50,6 +50,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from osmalyzer_spark.geo.polygon import Polygon, contains_expr
+from osmalyzer_spark.lineage import truncate
 from osmalyzer_spark.operators.knn import SaltSpec, radius_join
 
 # MatchStrength (reference: Osmalyzer/Correlator/MatchStrength.cs)
@@ -68,8 +69,6 @@ KIND_OUTSIDE_BOUNDS = "outside_bounds"
 # distributed DA: re-checkpoint the accumulated holds union every this
 # many rounds (bounds plan depth)
 _HOLDS_CHECKPOINT_EVERY = 8
-# checkpointed correlate: star connected-components round cap
-_CC_MAX_ITER = 64
 
 
 @dataclass
@@ -98,7 +97,6 @@ class CorrelatorParams:
     polygon: Polygon | None = None  # FilterItemsToPolygonParamater
     report_outside_polygon: bool = True
     salt: SaltSpec | None = None
-    broadcast_items: bool = False
     max_rounds: int = 64
     # max rows of DA round state (watermarks / contested acceptors) that
     # may be broadcast; larger round states use a shuffle join instead
@@ -338,10 +336,10 @@ def deferred_acceptance(
     watermark table replaces both a rejected-pair blacklist and a
     displaced-holder set.
 
-    Lineage: each round's proposal slice and winners are checkpointed
-    once; the full holds union re-checkpoints every
-    `_HOLDS_CHECKPOINT_EVERY` rounds, bounding plan depth and per-round
-    materialization.
+    Lineage: each round's proposal slice, winners and watermarks are
+    truncated once through `lineage.truncate`; the full holds union is
+    re-truncated every `_HOLDS_CHECKPOINT_EVERY` rounds, bounding plan
+    depth and per-round materialization.
     """
     # keys are computed ON THE FLY (cheap expressions) — materializing
     # them into the checkpointed candidate table costs real bytes at 10^8
@@ -349,9 +347,9 @@ def deferred_acceptance(
     # well-typed across rounds
     pkey = F.struct(*[c.alias(f"__k{i}") for i, c in enumerate(proposer_order)])
     akey = F.struct(*[c.alias(f"__k{i}") for i, c in enumerate(acceptor_order)])
-    # lazy local checkpoint: the count below is the first action, so one
-    # job both sizes the table and materializes the checkpoint blocks
-    cand = cand.localCheckpoint(eager=False)
+    # the count below is the first action, so one job both sizes the
+    # table and materializes the truncation
+    cand = truncate(cand)
     # Round-job sizing must follow the DATA, not the cluster (VERDICT r4
     # item 4: per-round wall grew 28% from 2 to 8 cores because every
     # round's jobs inherited cluster-sized partitioning). The candidate
@@ -434,13 +432,8 @@ def _da_rounds(
                 .drop("__wm")
             )
         # ONE scan of the candidate table per round, materialized small:
-        # everything downstream reads the checkpointed proposal slice
-        # eager=False throughout the round body: each checkpoint
-        # materializes inside its first consumer's job instead of paying
-        # a dedicated job — the round's action count drops from ~5 to ~2
-        # (latency, not data volume, dominates round wall; BENCH.md r5
-        # measured the flat share at ~35% of the 1M 8-core leg)
-        props = best_by(sl, proposer, pkey).localCheckpoint(eager=False)
+        # everything downstream reads the truncated proposal slice
+        props = truncate(best_by(sl, proposer, pkey))
         if unassigned is None:
             # holds is empty: everything is contested, nothing untouched
             untouched = holds
@@ -456,7 +449,7 @@ def _da_rounds(
             touched = holds.join(contested, acceptor, "left_semi")
             untouched = holds.join(contested, acceptor, "left_anti")
             contenders = touched.unionByName(props)
-        winners = best_by(contenders, acceptor, akey).localCheckpoint(eager=False)
+        winners = truncate(best_by(contenders, acceptor, akey))
         # losers covers BOTH rejected new proposals and displaced holders
         # (a displaced hold is a contender whose acceptor chose another);
         # each carries its pair's key — the next watermark is the max
@@ -472,16 +465,10 @@ def _da_rounds(
         if rounds % _HOLDS_CHECKPOINT_EVERY == 0:
             # unions accumulate ~state_parts partitions per round; narrow
             # back to data-sized parallelism at the periodic checkpoint
-            holds = holds.coalesce(max(state_parts, cand_parts)).localCheckpoint(
-                eager=False
-            )
-        unassigned = (
-            losers.groupBy(proposer)
-            .agg(F.max("__lost").alias("__wm"))
-            .localCheckpoint(eager=False)
-        )
+            holds = truncate(holds.coalesce(max(state_parts, cand_parts)))
+        unassigned = truncate(losers.groupBy(proposer).agg(F.max("__lost").alias("__wm")))
         # this count is the round's ONE materializing action: it computes
-        # winners -> losers -> unassigned and stores all three checkpoints
+        # winners -> losers -> unassigned and stores all three truncations
         n_unassigned = unassigned.count()
         # no conflicts => every proposal was accepted => every proposer
         # with remaining candidates is now held: stable, stop.
@@ -544,8 +531,8 @@ def _slim_inputs(
     # each side feeds BOTH the candidate join and its reverse-pass slim
     # frame (and the anti-joins re-read the latter): truncate once so the
     # caller's element/item construction is planned and evaluated once
-    elements = elements.localCheckpoint(eager=False)
-    items = items.localCheckpoint(eager=False)
+    elements = truncate(elements)
+    items = truncate(items)
 
     if p.polygon is not None:
         items = items.withColumn(
@@ -570,7 +557,6 @@ def _slim_inputs(
             probe_coords=("item_lat", "item_lon"),
             build_coords=("elem_lat", "elem_lon"),
             dist_col="dist_m",
-            broadcast_probe=p.broadcast_items,
             salt=p.salt,
         )
     strength = (
@@ -661,22 +647,19 @@ def _assign(
         p.max_rounds, broadcast_row_limit=p.broadcast_row_limit,
         local_pair_threshold=p.da_local_pair_threshold,
     )
-    # lazy checkpoints: truncate lineage for the many downstream
-    # consumers WITHOUT paying one sequential driver action each — the
-    # blocks materialize inside the first consuming job (three eager
-    # actions per correlate() call measured ~1 s each at sf0.1)
-    matched = holds.withColumn(
-        "far",
-        F.lit(False) if p.match_anywhere else F.col("dist_m") > F.lit(p.match_distance),
-    ).localCheckpoint(eager=False)
+    # truncate for the many downstream consumers; the blocks materialize
+    # inside the first consuming job (three eager actions per correlate()
+    # call measured ~1 s each at sf0.1)
+    matched = truncate(
+        holds.withColumn(
+            "far",
+            F.lit(False) if p.match_anywhere else F.col("dist_m") > F.lit(p.match_distance),
+        )
+    )
 
     # --- reverse pass (unmatched elements) --------------------------------
-    unmatched_items = items_in.join(
-        matched.select("item_id"), "item_id", "left_anti"
-    ).localCheckpoint(eager=False)
-    unmatched_elems = elems_slim.join(
-        matched.select("elem_id"), "elem_id", "left_anti"
-    ).localCheckpoint(eager=False)
+    unmatched_items = truncate(items_in.join(matched.select("item_id"), "item_id", "left_anti"))
+    unmatched_elems = truncate(elems_slim.join(matched.select("elem_id"), "elem_id", "left_anti"))
     lone_cand = unmatched_elems.filter(F.col("__lone"))
     plain_unmatched = unmatched_elems.filter(~F.col("__lone"))
 
@@ -757,9 +740,7 @@ def _assign(
             broadcast_row_limit=p.broadcast_row_limit,
             local_pair_threshold=p.da_local_pair_threshold,
         )
-        upgrades = up_holds.withColumn(
-            "far", F.col("dist_m") > F.lit(p.match_distance)
-        ).localCheckpoint(eager=False)
+        upgrades = truncate(up_holds.withColumn("far", F.col("dist_m") > F.lit(p.match_distance)))
         matched = matched.unionByName(upgrades)
         lone_cand = lone_cand.join(upgrades.select("elem_id"), "elem_id", "left_anti")
         unmatched_items = unmatched_items.join(
@@ -951,9 +932,9 @@ def checkpointed_correlate(
     pt = phase_times if phase_times is not None else {}
     t0 = time.time()
     elems_slim, items_slim, pairs_all = _slim_inputs(spark, elements, items, p)
-    pairs_all = pairs_all.localCheckpoint(eager=True)  # reused 3x below
-    # block-count of the materialized checkpoint (cheap); doubles as the
-    # CC edge-count bound so the small-graph path skips its own sizing
+    pairs_all = truncate(pairs_all)  # reused 3x below
+    # the first action: materializes the truncation; doubles as the CC
+    # edge-count bound so the small-graph path skips its own sizing
     n_pairs_all = pairs_all.count()
     pt["slim_pairs_s"] = round(time.time() - t0, 2)
     t0 = time.time()
@@ -983,12 +964,11 @@ def checkpointed_correlate(
     # diameter ~ extent/seek, measured in BENCH.md; the star algorithm's
     # round count is 8 on the 1M/775 m giant component, measured)
     cc_pair_counts: dict = {}
-    comps = connected_components_star(
-        edges,
-        max_iter=_CC_MAX_ITER,
-        edge_count_bound=n_pairs_all,
-        edge_counts_out=cc_pair_counts,
-    ).localCheckpoint(eager=True)
+    comps = truncate(
+        connected_components_star(
+            edges, edge_count_bound=n_pairs_all, edge_counts_out=cc_pair_counts
+        )
+    )
     pt["cc_star_s"] = round(time.time() - t0, 2)
     t_sizes = time.time()
 

@@ -29,7 +29,11 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
+from osmalyzer_spark.lineage import truncate
+
 _MERSENNE = (1 << 61) - 1
+# star rounds are O(log n); the 1M/775 m giant component takes 8
+_CC_MAX_ITER = 64
 
 
 def exact_dedup(df: DataFrame, id_col: str, text_col: str, normalized: bool = True) -> DataFrame:
@@ -194,7 +198,7 @@ def minhash_lsh_pairs(
         raise ValueError(f"num_hashes {num_hashes} not divisible by bands {bands}")
     # four consumers (both sides of the band self-join + both signature
     # re-joins): truncate so the signature UDF runs once, not per branch
-    sigs = sigs.localCheckpoint(eager=False)
+    sigs = truncate(sigs)
     r = num_hashes // bands
     band_keys = F.array(
         *[
@@ -386,7 +390,6 @@ def _local_components(pdf: "pd.DataFrame"):
 
 def connected_components_star(
     pairs: DataFrame,
-    max_iter: int = 50,
     with_rounds: bool = False,
     local_edge_threshold: int = 2_000_000,
     edge_count_bound: int | None = None,
@@ -399,7 +402,7 @@ def connected_components_star(
     propagation's O(diameter). This is the scale path for dense candidate
     graphs (the Riga-hotspot case, where one geometric component can span
     the whole extent and its diameter ~ extent/seek_distance — measured
-    in BENCH.md via tools/probe_components.py).
+    in BENCH.md).
 
     large-star: every node links its larger neighbors to the minimum of
     its closed neighborhood; small-star: edges oriented to the larger
@@ -407,8 +410,9 @@ def connected_components_star(
     minimum. The edge set converges to per-component stars rooted at the
     component minimum; labels read off as min(closed neighborhood).
 
-    Output matches connected_components_greedy exactly: (id, component =
-    min id of the component); optionally ((id, component), rounds).
+    Output: (id, component = min id of the component); optionally
+    ((id, component), rounds). Raises if the rounds do not converge in
+    `_CC_MAX_ITER`.
 
     Small-graph fast path: when the DEDUPLICATED edge count is at most
     `local_edge_threshold` (a driver-memory bound — ~32 MB of int64
@@ -463,11 +467,7 @@ def connected_components_star(
             ),
         )
         return (out, 0) if with_rounds else out
-    e = (
-        raw.distinct()
-        # lazy: the sizing count below materializes the checkpoint
-        .localCheckpoint(eager=False)
-    )
+    e = truncate(raw.distinct())  # the sizing count below materializes it
     # Size the ~6 shuffles per star round from the EDGE COUNT, not the
     # cluster: with session (cluster-sized) shuffle partitioning the
     # fixed O(log n) rounds cost more wall on MORE cores (VERDICT r4
@@ -497,14 +497,16 @@ def connected_components_star(
     orig_sp = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(cc_parts))
     try:
-        return _star_rounds(e, max_iter, with_rounds, cc_parts)
+        return _star_rounds(e, with_rounds, cc_parts)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", orig_sp)
 
 
-def _star_rounds(e: DataFrame, max_iter: int, with_rounds: bool, cc_parts: int):
+def _star_rounds(e: DataFrame, with_rounds: bool, cc_parts: int):
     """Alternating large/small-star rounds (shuffle partitions pinned to
-    `cc_parts` by the caller for the duration)."""
+    `cc_parts` by the caller for the duration). Each round's edge set is
+    truncated through `lineage.truncate`, whose lazy checkpoint the
+    round's signature collect materializes."""
 
     def canonical(df: DataFrame) -> DataFrame:
         return (
@@ -526,7 +528,7 @@ def _star_rounds(e: DataFrame, max_iter: int, with_rounds: bool, cc_parts: int):
 
     sig = signature(e)
     rounds_used = 0
-    for rounds_used in range(1, max_iter + 1):
+    for rounds_used in range(1, _CC_MAX_ITER + 1):
         # large-star
         sym = e.select(F.col("a").alias("u"), F.col("b").alias("v")).unionAll(
             e.select(F.col("b").alias("u"), F.col("a").alias("v"))
@@ -561,16 +563,14 @@ def _star_rounds(e: DataFrame, max_iter: int, with_rounds: bool, cc_parts: int):
             .select(F.col("v").alias("x"), F.col("mv").alias("y"))
         )
         selfs = mins2.select(F.col("u").alias("x"), F.col("mv").alias("y"))
-        # lazy: the signature collect is the round's one materializing
-        # action (fixed-point detection shares the checkpoint job)
-        e = canonical(linked.unionAll(selfs)).localCheckpoint(eager=False)
+        e = truncate(canonical(linked.unionAll(selfs)))
         new_sig = signature(e)
         if new_sig == sig:
             break
         sig = new_sig
     else:
         raise RuntimeError(
-            f"connected_components_star did not converge in {max_iter} rounds"
+            f"connected_components_star did not converge in {_CC_MAX_ITER} rounds"
         )
     sym = e.select(F.col("a").alias("u"), F.col("b").alias("v")).unionAll(
         e.select(F.col("b").alias("u"), F.col("a").alias("v"))
@@ -581,52 +581,3 @@ def _star_rounds(e: DataFrame, max_iter: int, with_rounds: bool, cc_parts: int):
         .select(F.col("u").alias("id"), "component")
     )
     return (return_df, rounds_used) if with_rounds else return_df
-
-
-def connected_components_greedy(
-    pairs: DataFrame, max_iter: int = 20, with_rounds: bool = False
-):
-    """Union-find over dup pairs: map every id to the min id of its
-    component. Min-label propagation converges in O(component diameter)
-    rounds — fine for the short chains dedup produces; raises if a
-    component's diameter exceeds max_iter instead of silently returning
-    split components. Output: (id, component), or ((id, component),
-    rounds_used) when with_rounds — tools/probe_components.py measures
-    rounds_used on the 1M candidate graph so the max_iter bound is
-    evidence, not hope (BENCH.md)."""
-    fwd = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    edges = fwd.union(
-        fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint(eager=True)
-    labels = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("component", F.col("node"))
-        .localCheckpoint(eager=True)
-    )
-    changed = 1
-    rounds_used = 0
-    for rounds_used in range(1, max_iter + 1):
-        neigh = (
-            edges.join(labels, edges.dst == labels.node)
-            .select(F.col("src").alias("node"), "component")
-        )
-        prop = (
-            neigh.union(labels.select("node", "component"))
-            .groupBy("node")
-            .agg(F.min("component").alias("new_component"))
-        )
-        joined = labels.join(prop, "node")
-        changed = joined.filter(F.col("new_component") < F.col("component")).limit(1).count()
-        labels = joined.select(
-            "node", F.least("component", "new_component").alias("component")
-        ).localCheckpoint(eager=True)
-        if changed == 0:
-            break
-    if changed != 0:
-        raise RuntimeError(
-            f"connected_components_greedy did not converge in {max_iter} rounds "
-            "(a duplicate chain is longer than max_iter); raise max_iter"
-        )
-    out = labels.select(F.col("node").alias("id"), "component")
-    return (out, rounds_used) if with_rounds else out

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from osmalyzer_spark.geo.cells import cell_id_expr
 from osmalyzer_spark.geo.distance import angle_between_segments_deg
 from osmalyzer_spark.geo.polygon import LOOSE_CONTAINMENT, STRICT_CONTAINMENT, Polygon, contains_expr
+from osmalyzer_spark.lineage import truncate
 
 
 def resolve_way_geometries(ways: DataFrame, nodes: DataFrame) -> DataFrame:
@@ -132,7 +133,7 @@ def double_mapped_features(
     )
     from osmalyzer_spark.geo.cells import neighbor_cells_expr
 
-    a = a.localCheckpoint(eager=False)  # broadcast-built join side
+    a = truncate(a)  # broadcast-built join side
     a = a.withColumn(
         "__cell", F.explode(neighbor_cells_expr(cell_id_expr("__clat", "__clon", cell_deg)))
     )

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from osmalyzer_spark.functions.address import fuzzy_address_match
 from osmalyzer_spark.functions.strings import brand_name_match
 from osmalyzer_spark.functions.tags import get_value, has_any_value, has_key
+from osmalyzer_spark.lineage import truncate
 from osmalyzer_spark.operators.correlator import (
     GOOD,
     STRONG,
@@ -221,11 +222,10 @@ def micro_reserve_analyzer(
     from pyspark.sql import Window
 
     w = Window.partitionBy("item_id").orderBy("dist_m", "elem_id")
-    best = (
+    best = truncate(
         cand.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .select("item_id", "area_m2", "elem_id", "dist_m")
-        .localCheckpoint(eager=True)
     )
     matched = best.select(
         F.lit("matched").alias("kind"),

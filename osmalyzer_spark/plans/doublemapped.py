@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 from osmalyzer_spark.functions.tags import get_value, has_key
 from osmalyzer_spark.geo.cells import cell_id_expr, neighbor_cells_expr
 from osmalyzer_spark.geo.polygon import inside_ring_expr
+from osmalyzer_spark.lineage import truncate
 
 AREA_AMENITIES = ["parking", "fuel", "kindergarten", "school", "college", "university"]
 AREA_LEISURE = ["pitch", "park", "playground", "marina"]
@@ -112,7 +113,11 @@ def double_mapped_check(
     without tags classify to null here anyway).
     """
     wkey, wval = area_feature_exprs("tags", F.lit(False))
-    areas = (
+    # truncate: the candidate join broadcasts this (exploded) side —
+    # building the broadcast from materialized blocks instead of
+    # re-evaluating the classify/area/centroid pipeline measured
+    # 4.4 -> 0.8 s at sf0.1 (guide §3.1 broadcast-build cost)
+    areas = truncate(
         ways.withColumn("__fkey", wkey)
         .withColumn("__fval", wval)
         .filter(F.col("__fkey").isNotNull())
@@ -136,11 +141,6 @@ def double_mapped_check(
                 / F.size("ring")
             ).alias("__alon"),
         )
-        # localCheckpoint: the candidate join broadcasts this (exploded)
-        # side — building the broadcast from materialized blocks instead
-        # of re-evaluating the classify/area/centroid pipeline measured
-        # 4.4 -> 0.8 s at sf0.1 (guide §3.1 broadcast-build cost)
-        .localCheckpoint(eager=False)
     )
     nkey, nval = area_feature_exprs("tags", F.lit(True))
     pois = (

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from osmalyzer_spark.geo.cells import cell_id_sql
 from osmalyzer_spark.geo.distance import haversine_sql
+from osmalyzer_spark.lineage import truncate
 from osmalyzer_spark.operators.knn import closest_join, radius_join
 
 # --------------------------------------------------------------------------
@@ -688,7 +689,9 @@ def q33_pt_pipeline(spark, sf_dir):
 
     cust = _t(spark, sf_dir, "customer")
     w = Window.partitionBy("grp").orderBy("c_custkey")
-    base = (
+    # four consumers (variant/relation sides, gtfs/osm position tables):
+    # plan and evaluate the windowed base once
+    base = truncate(
         cust.select("c_custkey", (F.col("c_custkey") % 25).alias("grp"))
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= 10)
@@ -706,9 +709,6 @@ def q33_pt_pipeline(spark, sf_dir):
         )
         .withColumn("olat", F.col("glat") + F.lit(1.5e-4))
         .withColumn("olon", F.col("glon"))
-        # four consumers (variant/relation sides, gtfs/osm position
-        # tables): plan and evaluate the windowed base once
-        .localCheckpoint(eager=False)
     )
 
     def side(name_col, lat_col, lon_col, id_off, prefix):
@@ -744,9 +744,8 @@ def q33_pt_pipeline(spark, sf_dir):
         "r_id as route_rel_id", "r_clat as centroid_lat2",
         "r_clon as centroid_lon2", "r_stops as stops2",
     )
-    matched = score_route_matches(
-        spark, variants, relations, accept_score=0.4
-    ).localCheckpoint(eager=False)  # route_stops join + final output join
+    # route_stops join + final output join
+    matched = truncate(score_route_matches(spark, variants, relations, accept_score=0.4))
 
     gtfs_pos = base.select(
         F.col("grp").alias("variant_id"), "i",
@@ -5397,8 +5396,8 @@ def q63_admin_boundaries(spark, sf_dir):
     from osmalyzer_spark.plans.admin import assign_admin_centers, external_assign
 
     rel = _q63_relations(spark, sf_dir)
-    members = _q63_members(spark, sf_dir).localCheckpoint(eager=False)
-    nodes = _q63_nodes(spark, sf_dir).localCheckpoint(eager=False)
+    members = truncate(_q63_members(spark, sf_dir))
+    nodes = truncate(_q63_nodes(spark, sf_dir))
 
     node_pos = members.filter(F.col("mtype") == "node").join(
         nodes.select(F.col("id").alias("ref"), "lat", "lon"), "ref"
@@ -5407,13 +5406,12 @@ def q63_admin_boundaries(spark, sf_dir):
         F.avg("lat").alias("lat"), F.avg("lon").alias("lon")
     )
     poly = Polygon(outers=[np.array(PIP_RING, dtype=float)], polygon_id="lv")
-    items = (
+    # consumed by external_assign AND the center pass: truncate so the
+    # centroid aggregation + polygon UDF evaluate once
+    items = truncate(
         rel.join(cent, "relation_id")
         .filter(contains_expr(poly, "lat", "lon"))
         .select(F.col("relation_id").alias("item_id"), "name", "lat", "lon")
-        # consumed by external_assign AND the center pass: truncate so the
-        # centroid aggregation + polygon UDF evaluate once
-        .localCheckpoint(eager=False)
     )
 
     matches = external_assign(items, _q63_entries(spark, sf_dir), _Q63_CAP_M)
@@ -5852,13 +5850,15 @@ def q65_city_analyzer(spark, sf_dir):
     # materialize each once (they are small: ids + tags + 4 corners)
     # instead of re-running the scans, PIP filter, and match windows
     # per branch
-    items = _q65_items(spark, sf_dir).localCheckpoint(eager=False)
-    rels = _q65_relations(spark, sf_dir).localCheckpoint(eager=False)
+    items = truncate(_q65_items(spark, sf_dir))
+    rels = truncate(_q65_relations(spark, sf_dir))
 
-    m = match_cities(
-        items.select("item_id", "name", "addr_id", "item_lat", "item_lon"),
-        rels.select("elem_id", "name_tag", "addr_tag", "elem_lat", "elem_lon"),
-    ).localCheckpoint(eager=False)
+    m = truncate(
+        match_cities(
+            items.select("item_id", "name", "addr_id", "item_lat", "item_lon"),
+            rels.select("elem_id", "name_tag", "addr_tag", "elem_lat", "elem_lon"),
+        )
+    )
     mm = m.join(items, "item_id").join(rels, "elem_id")
 
     def _rows(df, kind, **cols):

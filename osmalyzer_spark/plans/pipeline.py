@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from osmalyzer_spark.operators.dedup import (
-    connected_components_greedy,
+    connected_components_star,
     exact_dedup,
     minhash_dedup,
 )
@@ -73,7 +73,7 @@ def clean_corpus(
         exact_docs, id_col, text_col,
         threshold=neardup_threshold, num_hashes=num_hashes, bands=bands,
     )
-    comps = connected_components_greedy(pairs)
+    comps = connected_components_star(pairs)
     drop_near = comps.filter(F.col("id") != F.col("component")).select(
         F.col("id").alias(id_col)
     )

@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from osmalyzer_spark.functions.tags import get_value
 from osmalyzer_spark.geo.cells import cell_id_expr, neighbor_cells_expr
 from osmalyzer_spark.geo.polygon import inside_ring_expr
+from osmalyzer_spark.lineage import truncate
 
 NODE_PROXIMITY_M = 30.0  # PlaygroundAnalyzer.cs:24
 SEARCH_DISTANCE_M = 100.0  # PlaygroundAnalyzer.cs:29
@@ -86,7 +87,7 @@ def playground_check(
         F.aggregate("ring", F.lit(0.0), lambda acc, p: acc + p["lon"])
         / F.size("ring"),
     )
-    a = a.localCheckpoint(eager=False)  # broadcast-built join side
+    a = truncate(a)  # broadcast-built join side
     a = a.withColumn(
         "__cell",
         F.explode(neighbor_cells_expr(cell_id_expr("__clat", "__clon", cell_deg))),

@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from osmalyzer_spark.functions.tags import get_value
+from osmalyzer_spark.lineage import truncate
 
 # RestrictionRelationAnalyzer.cs:1012-1027
 KNOWN_VEHICLE_MODES = [
@@ -187,20 +188,18 @@ def turn_restriction_check(relations: DataFrame, ways: DataFrame) -> DataFrame:
 
     Returns (relation_id, issue, detail).
     """
-    # localCheckpoint, not cache: downstream issue branches re-analyze
+    # truncate, not cache: downstream issue branches re-analyze
     # and re-optimize the shared subplan on every reference — truncating
     # the lineage keeps every branch's plan a short LogicalRDD scan
     # (guide §3.3 plan-size note). rels/ways are truncated FIRST because
-    # even a lazy localCheckpoint plans its subplan (Dataset.checkpoint
+    # even a lazy truncation plans its subplan (Dataset.checkpoint
     # resolves queryExecution.toRdd), and planning the caller's
     # expression-heavy way/relation constructions repeatedly was most of
     # q50's wall (cProfile: 8.7 of 12.3 s in 6 checkpoint calls).
-    rels = relations.filter(
-        get_value("tags", "type") == "restriction"
-    ).localCheckpoint(eager=False)
-    ways = ways.localCheckpoint(eager=False)
-    tags = _classify_tags(rels).localCheckpoint(eager=False)
-    members = _classify_members(rels).localCheckpoint(eager=False)
+    rels = truncate(relations.filter(get_value("tags", "type") == "restriction"))
+    ways = truncate(ways)
+    tags = truncate(_classify_tags(rels))
+    members = truncate(_classify_members(rels))
 
     issues = []
 
@@ -242,7 +241,7 @@ def turn_restriction_check(relations: DataFrame, ways: DataFrame) -> DataFrame:
     # ---- per-mode primary/conditional pairing ------------------------
     # tag keys are unique, so each (relation, mode) has at most one
     # primary and one conditional entry (SingleOrDefault, :297-300)
-    pm = (
+    pm = truncate(  # 3 filter branches below
         entries.groupBy("relation_id", "mode")
         .agg(
             F.max(F.when(~F.col("is_conditional"), F.col("vclass"))).alias("p_vclass"),
@@ -251,7 +250,6 @@ def turn_restriction_check(relations: DataFrame, ways: DataFrame) -> DataFrame:
             F.max(F.when(F.col("is_conditional"), F.col("main_value"))).alias("c_main"),
             F.max(F.when(F.col("is_conditional"), F.col("condition"))).alias("c_cond"),
         )
-        .localCheckpoint(eager=False)  # 3 filter branches below
     )
     issues.append(
         _issue(
@@ -290,14 +288,16 @@ def turn_restriction_check(relations: DataFrame, ways: DataFrame) -> DataFrame:
     # valued ones (:133). NOTE: the reference takes the main value with
     # SingleOrDefault (:152), which THROWS on >1 non-none values — the
     # size guard here treats that case as the mixed kind instead.
-    per_rel = entries.groupBy("relation_id").agg(
-        F.array_sort(
-            F.collect_set(
-                F.when(F.col("vclass").isin("simple", "cond"), F.col("main_value"))
-            )
-        ).alias("base_values"),
-        F.array_sort(F.collect_set("mode")).alias("modes"),
-    ).localCheckpoint(eager=False)  # feeds 2 issues + kind + has_default
+    per_rel = truncate(  # feeds 2 issues + kind + has_default
+        entries.groupBy("relation_id").agg(
+            F.array_sort(
+                F.collect_set(
+                    F.when(F.col("vclass").isin("simple", "cond"), F.col("main_value"))
+                )
+            ).alias("base_values"),
+            F.array_sort(F.collect_set("mode")).alias("modes"),
+        )
+    )
     non_none = F.filter(F.col("base_values"), lambda v: v != "none")
     issues.append(
         _issue(
@@ -411,7 +411,7 @@ def turn_restriction_check(relations: DataFrame, ways: DataFrame) -> DataFrame:
         F.array(*[F.when(cond, F.lit(name)) for name, cond in role_rules]),
         lambda x: x.isNotNull(),
     )
-    mk = mk.withColumn("role_issues", fired).localCheckpoint(eager=False)
+    mk = truncate(mk.withColumn("role_issues", fired))
     issues.append(
         mk.filter(F.size("role_issues") > 0).select(
             "relation_id",
@@ -485,9 +485,8 @@ def turn_restriction_check(relations: DataFrame, ways: DataFrame) -> DataFrame:
     )
     # an unresolvable way ref yields null endpoints -> fail closed (the
     # reference's all-members-downloaded prefilter makes this unreachable)
-    chains = chains.withColumn(
-        "chained", F.coalesce(chained, F.lit(False))
-    ).localCheckpoint(eager=False)  # not_chained issue + pointless-turn join
+    # not_chained issue + pointless-turn join
+    chains = truncate(chains.withColumn("chained", F.coalesce(chained, F.lit(False))))
     issues.append(
         _issue(chains.filter(~F.col("chained")), "not_chained", F.lit(""))
     )

@@ -42,6 +42,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from osmalyzer_spark.functions.tags import get_value
+from osmalyzer_spark.lineage import truncate
 
 # data/street name suffixes.tsv, order and duplicates preserved
 KNOWN_SUFFIXES = [
@@ -105,12 +106,10 @@ def street_name_check(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.coalesce(F.col("__lvm"), F.lit(0))).alias("n_lvm"),
     )
-    # localCheckpoint, not cache: 7 cascade branches re-plan the grouped
+    # truncate, not cache: 7 cascade branches re-plan the grouped
     # name table (and the caller's way construction under it) on every
     # reference; a truncated LogicalRDD keeps each branch's plan short
-    groups = groups.withColumn(
-        "__sfx", _suffix_idx(F.col("name"))
-    ).localCheckpoint(eager=False)
+    groups = truncate(groups.withColumn("__sfx", _suffix_idx(F.col("name"))))
 
     null_s = F.lit(None).cast("string")
     null_l = F.lit(None).cast("long")
@@ -169,14 +168,16 @@ def street_name_check(
         rest.withColumn("__clean", clean_name_osm(F.col("name")))
         .join(F.broadcast(r), "__clean", "left")
     )
-    best = cand.groupBy("name", "n", "n_lvm", "__clean").agg(
-        F.min(
-            F.when(
-                F.col("route_id").isNotNull(),
-                F.struct("route_id", "route_name", "route_ref"),
-            )
-        ).alias("__r")
-    ).localCheckpoint(eager=False)  # matched branch + rest of cascade
+    best = truncate(  # matched branch + rest of cascade
+        cand.groupBy("name", "n", "n_lvm", "__clean").agg(
+            F.min(
+                F.when(
+                    F.col("route_id").isNotNull(),
+                    F.struct("route_id", "route_name", "route_ref"),
+                )
+            ).alias("__r")
+        )
+    )
     osm_matched = best.filter(F.col("__r").isNotNull())
     osm_rows = osm_matched.select(
         F.when(F.col("__r.route_name") == F.col("name"), F.lit("route_full_osm"))
@@ -194,13 +195,15 @@ def street_name_check(
         "law_code", "law_name", clean_name_osm(F.col("law_name")).alias("__clean")
     )
     lcand = rest.join(F.broadcast(lw), "__clean", "left")
-    lbest = lcand.groupBy("name", "n", "n_lvm", "__clean").agg(
-        F.min(
-            F.when(
-                F.col("law_code").isNotNull(), F.struct("law_code", "law_name")
-            )
-        ).alias("__r")
-    ).localCheckpoint(eager=False)  # law branch + lvm/kuldiga/unknown tail
+    lbest = truncate(  # law branch + lvm/kuldiga/unknown tail
+        lcand.groupBy("name", "n", "n_lvm", "__clean").agg(
+            F.min(
+                F.when(
+                    F.col("law_code").isNotNull(), F.struct("law_code", "law_name")
+                )
+            ).alias("__r")
+        )
+    )
     law_matched = lbest.filter(F.col("__r").isNotNull())
     law_rows = law_matched.select(
         F.when(F.col("__r.law_name") == F.col("name"), F.lit("route_full_law"))

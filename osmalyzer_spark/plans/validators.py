@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from osmalyzer_spark.functions.tags import get_value, has_key, values_equal_unordered
+from osmalyzer_spark.lineage import truncate
 
 # BarrierConnectionAnalyzer.cs:49-61 — barrier values assumed passable.
 PASSABLE_BARRIERS = [
@@ -171,9 +172,9 @@ def barrier_connections(ways: DataFrame, nodes: DataFrame) -> DataFrame:
     # membership dedup is map-side array_distinct (way ids are unique,
     # so duplicates only arise within one way's array) — the only
     # shuffles left are the node-id equi-join and the anti-join.
-    # localCheckpoint: the barrier and highway branches would otherwise
+    # truncate: the barrier and highway branches would otherwise
     # each recompute the caller's way-construction subplan (guide §2.4)
-    ways = ways.localCheckpoint(eager=False)
+    ways = truncate(ways)
     bn = ways.filter(
         has_key("tags", "barrier")
         & ~get_value("tags", "barrier").isin(PASSABLE_BARRIERS)
@@ -216,7 +217,7 @@ def bridge_water_connections(ways: DataFrame, nodes: DataFrame) -> DataFrame:
     and the average coordinate of the connection points
     (OsmGeoTools.GetAverageCoord over the node list).
     """
-    ways = ways.localCheckpoint(eager=False)  # bridge + waterway branches
+    ways = truncate(ways)  # bridge + waterway branches
     bridges = ways.filter(has_key("tags", "bridge")).select(
         F.col("id").alias("bridge_id"),
         F.explode(F.array_distinct("node_ids")).alias("node_id"),
@@ -257,12 +258,12 @@ def crossing_consistency(ways: DataFrame, nodes: DataFrame) -> DataFrame:
     Output: one row per issue — (way_id, node_id, tag, way_value,
     node_value, severity).
     """
-    cways = ways.filter(
-        get_value("tags", "highway").isin("path", "footway")
-        & (get_value("tags", "footway") == "crossing")
-    ).select(
-        F.col("id").alias("way_id"), F.col("tags").alias("way_tags"), "node_ids"
-    ).localCheckpoint(eager=False)  # matched walk + pairs re-join
+    cways = truncate(  # matched walk + pairs re-join
+        ways.filter(
+            get_value("tags", "highway").isin("path", "footway")
+            & (get_value("tags", "footway") == "crossing")
+        ).select(F.col("id").alias("way_id"), F.col("tags").alias("way_tags"), "node_ids")
+    )
     cnodes = nodes.filter(get_value("tags", "highway") == "crossing").select(
         F.col("id").alias("node_id"), F.col("tags").alias("node_tags")
     )
@@ -346,7 +347,7 @@ def terminating_ways(ways: DataFrame) -> DataFrame:
 
     Output: one row per termination point — (area_id, node_id, way_id).
     """
-    ways = ways.localCheckpoint(eager=False)  # area + routable branches
+    ways = truncate(ways)  # area + routable branches
     areas = ways.filter(
         _closed(ways)
         & (
@@ -917,7 +918,10 @@ def spelling_check(elements: DataFrame, dictionary: DataFrame) -> DataFrame:
             lambda k, v: _name_language(k).isNotNull() & (_name_language(k) != "lv"),
         )
     )
-    occ = (
+    # consumed twice (distinct-part spellcheck + occurrence join-back):
+    # truncate so the slash-protection regex chain and the name:xx
+    # map_filter tree are planned and evaluated once
+    occ = truncate(
         els.select(
             F.col("id").alias("elem_id"),
             name.alias("value"),
@@ -930,10 +934,6 @@ def spelling_check(elements: DataFrame, dictionary: DataFrame) -> DataFrame:
         )
         .filter(~((F.col("n_parts") > 1) & F.array_contains("foreign", F.col("part"))))
         .select("elem_id", "value", "part")
-        # consumed twice (distinct-part spellcheck + occurrence join-back):
-        # truncate so the slash-protection regex chain and the name:xx
-        # map_filter tree are planned and evaluated once
-        .localCheckpoint(eager=False)
     )
     # spellcheck each DISTINCT part once (okValues discipline)
     words = F.filter(

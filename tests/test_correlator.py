@@ -595,6 +595,8 @@ def test_da_local_gate_matches_distributed(spark):
     dist = correlate(
         spark, edf, idf, CorrelatorParams(**kw, da_local_pair_threshold=0)
     )
+    # the scene's value is its long displacement chains (22 rounds)
+    assert dist.rounds >= 20, dist.rounds
     key = lambda r: (r["elem_id"], r["item_id"], r["strength"],
                      round(r["dist_m"], 9), r["far"])
     assert sorted(map(key, local.matched.collect())) == sorted(

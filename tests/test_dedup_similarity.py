@@ -5,7 +5,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from osmalyzer_spark.operators.dedup import (
-    connected_components_greedy,
+    connected_components_star,
     exact_dedup,
     minhash_dedup,
     minhash_signatures,
@@ -136,7 +136,7 @@ def test_connected_components(spark):
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22), (22, 23)], "id_a long, id_b long"
     )
-    comp = {r["id"]: r["component"] for r in connected_components_greedy(pairs).collect()}
+    comp = {r["id"]: r["component"] for r in connected_components_star(pairs).collect()}
     assert comp[1] == comp[2] == comp[3] == 1
     assert comp[10] == comp[11] == 10
     assert comp[20] == comp[21] == comp[22] == comp[23] == 20
@@ -381,11 +381,8 @@ def test_batch_shingle_spans_match_single_doc_path():
             assert (got == _shingle_hashes(t, k)).all(), (t, k)
 
 
-def test_star_cc_matches_greedy_on_random_graphs(spark):
-    from osmalyzer_spark.operators.dedup import (
-        connected_components_greedy,
-        connected_components_star,
-    )
+def test_star_cc_matches_union_find_on_random_graphs(spark):
+    from test_property import _union_find_components
 
     rng = np.random.default_rng(17)
     for trial in range(3):
@@ -393,32 +390,22 @@ def test_star_cc_matches_greedy_on_random_graphs(spark):
         edges = [(int(rng.integers(0, n)), int(rng.integers(0, n))) for _ in range(m)]
         edges = [(a, b) for a, b in edges if a != b]
         df = spark.createDataFrame(edges, "id_a long, id_b long")
-        greedy = {(r["id"], r["component"])
-                  for r in connected_components_greedy(df, max_iter=64).collect()}
+        want = set(_union_find_components(edges).items())
         star = {(r["id"], r["component"])
                 for r in connected_components_star(
                     df, local_edge_threshold=0).collect()}
-        assert star == greedy, f"trial {trial} (distributed)"
+        assert star == want, f"trial {trial} (distributed)"
         local = {(r["id"], r["component"])
                  for r in connected_components_star(df).collect()}
-        assert local == greedy, f"trial {trial} (driver-local fast path)"
+        assert local == want, f"trial {trial} (driver-local fast path)"
 
 
 def test_star_cc_long_chain_logarithmic_rounds(spark):
-    """A 200-node path: min-label propagation needs ~199 rounds (raises at
-    max_iter=20); the star algorithm converges in O(log n)."""
-    import pytest as _pytest
-
-    from osmalyzer_spark.operators.dedup import (
-        connected_components_greedy,
-        connected_components_star,
-    )
-
+    """A 200-node path: min-label propagation would need ~199 rounds; the
+    star algorithm converges in O(log n)."""
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(199)], "id_a long, id_b long"
     )
-    with _pytest.raises(RuntimeError, match="did not converge"):
-        connected_components_greedy(chain, max_iter=20)
     labels, rounds = connected_components_star(
         chain, with_rounds=True, local_edge_threshold=0
     )
