@@ -5,7 +5,7 @@ checkpoints. Design (SURVEY §2.9): the input is hashed into `n_buckets`
 cell buckets (pmod over the spatial cell id, so a bucket is a stable
 geographic slice); output rows land in `<out>/data/` partitioned by
 `__bucket`, and one progress row per finished bucket lands in
-`<out>/_progress/`:
+`<out>/_progress/` (a JSON-lines file per committed batch):
 
   (run_id, bucket, rows_in, rows_out, wall_ms, input_snapshot, batch_ts)
 
@@ -13,6 +13,14 @@ A resumed run (same run_id + output dir) reads the progress table and
 skips done buckets — only unfinished slices recompute. The progress
 table doubles as the lineage record: which snapshot produced which
 bucket, with row counts in/out.
+
+Metadata (progress records, the `_schema` record, `_STAGED` markers) is
+small files handled on the driver through the path's Hadoop FileSystem:
+`exists()` alone decides that a record is absent, a record is written as
+a hidden temp file plus a rename, and every other error propagates —
+a record that exists but cannot be read fails the run instead of
+passing for "nothing done yet". None of it starts a Spark job, and the
+data read-backs are given their recorded schema, so no read infers one.
 
 Crash safety: every data write uses DYNAMIC partition overwrite
 (`spark.sql.sources.partitionOverwriteMode=dynamic` + mode("overwrite")),
@@ -42,18 +50,22 @@ the distributed analog at cell granularity).
 
 from __future__ import annotations
 
+import json
 import os
 import time
+import uuid
 from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 PROGRESS_SCHEMA = (
     "run_id string, bucket int, rows_in long, rows_out long, "
     "wall_ms long, input_snapshot string, batch_ts double"
 )
+_PROGRESS_COLUMNS = [c.split()[0] for c in PROGRESS_SCHEMA.split(", ")]
 
 
 def _dynamic_overwrite(spark: SparkSession):
@@ -61,44 +73,64 @@ def _dynamic_overwrite(spark: SparkSession):
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
 
+def _fs_path(spark: SparkSession, path: str):
+    """The Hadoop FileSystem of `path` and its Path. Checkpoint metadata
+    goes through it on the driver: it holds on any Hadoop filesystem
+    (hdfs://, s3a://, ...) and starts no Spark job."""
+    p = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), p
+
+
+def _hidden(name: str) -> bool:
+    """Spark's file-index rule for names its readers skip: a leading '.',
+    or a leading '_' without '=' (`__bucket=3` is a partition directory,
+    `_SUCCESS` is metadata)."""
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
 def _write_value(spark: SparkSession, value: str, path: str) -> None:
-    """One-string marker/record write, via Spark (any Hadoop filesystem).
+    """Write a small text record (marker, schema, progress) atomically: a
+    hidden temp file next to `path`, then a rename, so a reader sees the
+    whole record or none. Each record is written once; a failed rename
+    (HDFS refuses one onto an existing path) raises."""
+    fs, dst = _fs_path(spark, path)
+    tmp = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(
+        dst.getParent(), f".{dst.getName()}.{uuid.uuid4().hex}.tmp"
+    )
+    out = fs.create(tmp, False)
+    try:
+        out.write(value.encode())
+    finally:
+        out.close()
+    if not fs.rename(tmp, dst):
+        fs.delete(tmp, False)
+        raise OSError(f"could not move the record {tmp} to {path}")
 
-    Written as a single-partition `range(1).select(lit(value))` parquet:
-    a `createDataFrame([...]).coalesce(1)` local-relation write measures
-    a ~5 s fixed cost per call in this environment vs ~0.2 s for this
-    form (guide §1 measure-first), and these markers are written on
-    every checkpointed run."""
-    spark.range(0, 1, 1, 1).select(F.lit(value).alias("value")).write.mode(
-        "overwrite"
-    ).parquet(path)
 
-
-def _read_value(spark: SparkSession, path: str) -> str:
-    """Read back a `_write_value` marker (raises if absent)."""
-    rows = spark.read.parquet(path).collect()
-    return rows[0]["value"]
+def _read_value(spark: SparkSession, path: str) -> str | None:
+    """Read back a `_write_value` record; None only if `path` does not
+    exist. Every other error propagates."""
+    fs, p = _fs_path(spark, path)
+    if not fs.exists(p):
+        return None
+    stream = fs.open(p)
+    try:
+        return bytes(stream.readAllBytes()).decode()
+    finally:
+        stream.close()
 
 
 def _has_data_files(spark: SparkSession, path: str) -> bool:
     """Whether `path` exists and holds a file the parquet reader would
-    read. Goes through the Hadoop FileSystem of the path, so it holds on
-    any Hadoop filesystem (hdfs://, s3a://, ...). Hidden names follow
-    Spark's file index: a leading '.', or a leading '_' without '='
-    (`__bucket=3` is a partition directory, `_SUCCESS` is metadata)."""
-    jvm = spark.sparkContext._jvm
-    root = jvm.org.apache.hadoop.fs.Path(path)
-    fs = root.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    read (no name component hidden by `_hidden`)."""
+    fs, root = _fs_path(spark, path)
     if not fs.exists(root):
         return False
     prefix = fs.makeQualified(root).toUri().getPath().rstrip("/") + "/"
     files = fs.listFiles(root, True)
     while files.hasNext():
         rel = files.next().getPath().toUri().getPath()[len(prefix):]
-        if not any(
-            part.startswith(".") or (part.startswith("_") and "=" not in part)
-            for part in rel.split("/")
-        ):
+        if not any(_hidden(part) for part in rel.split("/")):
             return True
     return False
 
@@ -118,33 +150,31 @@ class CheckpointedRun:
     def _progress_path(self) -> str:
         return os.path.join(self.out_path, "_progress")
 
+    def _progress_rows(self, spark: SparkSession) -> list[dict]:
+        """Every progress record of this run, parsed on the driver. A
+        record that does not parse raises: reading it as "no bucket done"
+        would recompute every bucket and duplicate its lineage rows."""
+        fs, root = _fs_path(spark, self._progress_path)
+        if not fs.exists(root):
+            return []
+        rows = []
+        for st in fs.listStatus(root):
+            if st.isFile() and not _hidden(st.getPath().getName()):
+                text = _read_value(spark, st.getPath().toString())
+                rows += [json.loads(line) for line in text.splitlines() if line]
+        return [r for r in rows if r["run_id"] == self.run_id]
+
     def done_buckets(self, spark: SparkSession) -> set[int]:
-        try:
-            rows = (
-                spark.read.schema(PROGRESS_SCHEMA)
-                .parquet(self._progress_path)
-                .filter(F.col("run_id") == self.run_id)
-                .select("bucket")
-                .collect()
-            )
-            return {r["bucket"] for r in rows}
-        except Exception:  # noqa: BLE001 — no progress yet
-            return set()
+        return {int(r["bucket"]) for r in self._progress_rows(spark)}
 
     def _write_progress(self, spark: SparkSession, rows: list[tuple]) -> None:
-        import pandas as pd
-
-        # pandas -> Arrow createDataFrame: ~3x less fixed cost per write
-        # than the pickled-rows local relation (measured; guide §6 Arrow)
-        pdf = pd.DataFrame(
-            rows,
-            columns=[
-                "run_id", "bucket", "rows_in", "rows_out",
-                "wall_ms", "input_snapshot", "batch_ts",
-            ],
+        # one JSON-lines file per call; the unique name makes it an append
+        lines = "".join(
+            json.dumps(dict(zip(_PROGRESS_COLUMNS, r))) + "\n" for r in rows
         )
-        spark.createDataFrame(pdf, PROGRESS_SCHEMA).write.mode("append").parquet(
-            self._progress_path
+        _write_value(
+            spark, lines,
+            os.path.join(self._progress_path, f"part-{uuid.uuid4().hex}.json"),
         )
 
     @property
@@ -154,24 +184,23 @@ class CheckpointedRun:
     def _write_schema_once(self, spark: SparkSession, df: DataFrame) -> None:
         """Record the output schema so empty runs (zero output rows => a
         partitioned parquet write creates NO files) still yield a typed
-        empty result instead of an unreadable directory."""
-        try:
-            _read_value(spark, self._schema_path)
-            return
-        except Exception:  # noqa: BLE001 — not recorded yet
-            pass
-        _write_value(spark, df.schema.json(), self._schema_path)
+        empty result instead of an unreadable directory, and so the data
+        read-back is given its schema instead of inferring it (a job)."""
+        fs, p = _fs_path(spark, self._schema_path)
+        if not fs.exists(p):
+            _write_value(spark, df.schema.json(), self._schema_path)
 
     def _read_data(self, spark: SparkSession) -> DataFrame:
+        text = _read_value(spark, self._schema_path)
+        if text is None:
+            raise FileNotFoundError(
+                f"checkpoint {self.out_path} has no output schema record"
+            )
+        schema = StructType.fromJson(json.loads(text))
         # only a missing or empty data directory means "zero rows ever
         # written"; an unreadable one must fail, not read as no rows
         if _has_data_files(spark, self._data_path):
-            return spark.read.parquet(self._data_path)
-        import json
-
-        from pyspark.sql.types import StructType
-
-        schema = StructType.fromJson(json.loads(_read_value(spark, self._schema_path)))
+            return spark.read.schema(schema).parquet(self._data_path)
         return spark.createDataFrame([], schema)
 
     def _result(self, spark: SparkSession) -> DataFrame:
@@ -185,6 +214,46 @@ class CheckpointedRun:
             .drop("__bucket")
         )
 
+    def _staging_path(self, name: str) -> str:
+        return os.path.join(self.out_path, "staged", self.run_id, name)
+
+    def staged(
+        self,
+        spark: SparkSession,
+        name: str,
+        bucket_col: str = "__cbucket",
+        fingerprint: str = "",
+        schema: StructType | None = None,
+    ) -> tuple[DataFrame, dict] | None:
+        """A finished `stage_bucketed` table of this run, read back with
+        its recorded schema, and the `info` recorded with it; None if
+        `name` is not staged yet. Raises ValueError if the `_STAGED`
+        marker was written for another fingerprint (or, when `schema` is
+        given, another schema); a marker that does not parse raises too.
+        """
+        path = self._staging_path(name)
+        text = _read_value(spark, os.path.join(path, "_STAGED"))
+        if text is None:
+            return None
+        marker = json.loads(text)
+        recorded = StructType.fromJson(json.loads(marker["schema"]))
+        got = (marker["run_id"], marker["fingerprint"], recorded.simpleString())
+        want = (
+            self.run_id,
+            fingerprint,
+            recorded.simpleString() if schema is None else schema.simpleString(),
+        )
+        if got != want:
+            raise ValueError(
+                f"staged input {name!r} at {path} was built from a different "
+                f"input (marker {got} != expected {want}); resume with the "
+                "original input, or start a fresh run_id / out_path"
+            )
+        out = spark.read.schema(recorded).parquet(path)
+        # a generic bucket column may be wider than int; a cast of a
+        # partition column still partition-prunes
+        return out.withColumn(bucket_col, F.col(bucket_col).cast("int")), marker["info"]
+
     def stage_bucketed(
         self,
         spark: SparkSession,
@@ -192,6 +261,7 @@ class CheckpointedRun:
         name: str,
         bucket_col: str = "__cbucket",
         fingerprint: str = "",
+        info: dict | None = None,
     ) -> DataFrame:
         """Persist a bucketed input partitioned by its bucket column and
         read it back, so every downstream `filter(bucket_col == b)` is a
@@ -201,53 +271,39 @@ class CheckpointedRun:
 
         Idempotent per (out_path, run_id, name): a resume of the SAME run
         reuses the staging — the bucket layout is deterministic given the
-        same input. The `_STAGED` marker records (run_id, fingerprint,
-        schema); a reuse whose marker disagrees RAISES instead of silently
-        correlating against stale staged data (a new run against the same
-        out_path gets a new run_id and therefore a fresh staging
-        directory). Pass `fingerprint` (e.g. the input snapshot id) to
-        strengthen the check beyond the schema. Marker IO goes through
-        Spark itself, so the checkpoint dir may live on any Hadoop
-        filesystem (hdfs://, s3a://, ...), not just the local disk.
+        same input. The `_STAGED` marker is a small JSON file written
+        after the data, through the path's Hadoop FileSystem (so the
+        checkpoint dir may live on hdfs://, s3a://, ...). It records
+        (run_id, fingerprint, schema) plus the caller's `info`; a reuse
+        whose marker disagrees RAISES instead of silently correlating
+        against stale staged data (a new run against the same out_path
+        gets a new run_id and therefore a fresh staging directory). Pass
+        `fingerprint` (e.g. the input snapshot id) to strengthen the check
+        beyond the schema. `staged` reads a finished staging back without
+        the input frame.
         """
-        import json
-
-        path = os.path.join(self.out_path, "staged", self.run_id, name)
+        hit = self.staged(spark, name, bucket_col, fingerprint, df.schema)
+        if hit is not None:
+            return hit[0]
+        path = self._staging_path(name)
+        (
+            df.repartition(F.col(bucket_col))
+            .write.mode("overwrite")
+            .partitionBy(bucket_col)
+            .parquet(path)
+        )
         # our own completion marker: dynamic partitionOverwriteMode (set
         # session-wide by the run paths) suppresses the _SUCCESS file. An
-        # underscore-prefixed subdirectory is invisible to the parquet
-        # reader, so the marker can live inside the staged dir.
-        marker = os.path.join(path, "_STAGED")
-        want = json.dumps(
-            {
-                "run_id": self.run_id,
-                "fingerprint": fingerprint,
-                "schema": df.schema.simpleString(),
-            },
-            sort_keys=True,
-        )
-        try:
-            existing = _read_value(spark, marker)
-        except Exception:  # noqa: BLE001 — not staged yet
-            existing = None
-        if existing is None:
-            (
-                df.repartition(F.col(bucket_col))
-                .write.mode("overwrite")
-                .partitionBy(bucket_col)
-                .parquet(path)
-            )
-            _write_value(spark, want, marker)
-        elif existing != want:
-            raise ValueError(
-                f"staged input {name!r} at {path} was built from a different "
-                f"input (marker {existing} != expected {want}); resume with "
-                "the original input, or start a fresh run_id / out_path"
-            )
-        out = spark.read.parquet(path)
-        # partition-column inference yields int already; cast defensively
-        # (a cast of a partition column still partition-prunes)
-        return out.withColumn(bucket_col, F.col(bucket_col).cast("int"))
+        # underscore-prefixed name is invisible to the parquet reader, so
+        # the marker can live inside the staged dir.
+        marker = {
+            "run_id": self.run_id,
+            "fingerprint": fingerprint,
+            "schema": df.schema.json(),
+            "info": info or {},
+        }
+        _write_value(spark, json.dumps(marker, sort_keys=True), os.path.join(path, "_STAGED"))
+        return self.staged(spark, name, bucket_col, fingerprint, df.schema)[0]
 
     def run_single_pass(
         self,
@@ -465,6 +521,7 @@ class CheckpointedRun:
         """The lineage/metrics table for this run."""
         return (
             spark.read.schema(PROGRESS_SCHEMA)
-            .parquet(self._progress_path)
+            .option("mode", "FAILFAST")
+            .json(self._progress_path)
             .filter(F.col("run_id") == self.run_id)
         )

@@ -39,6 +39,7 @@ image `bytes` — are rejected at the door; re-join them by id afterwards.
 
 from __future__ import annotations
 
+import json
 import time
 from dataclasses import dataclass, field
 from typing import Callable
@@ -871,65 +872,22 @@ _CORR_OUT_SCHEMA = T.StructType(
 )
 
 
-def checkpointed_correlate(
+def _stage_corr_input(
     spark: SparkSession,
     elements: DataFrame,
     items: DataFrame,
-    params: "CorrelatorParams | None",
+    p: CorrelatorParams,
     ck,
-    small_component_max_pairs: int = 200_000,
-    input_snapshot: str = "",
-    fail_after_batches: int | None = None,  # crash-simulation test hook (big phase)
-    fail_small_before_progress: bool = False,  # crash-simulation hook (small phase)
-    phase_times: dict | None = None,  # filled with per-phase wall seconds
-) -> DataFrame:
-    """Resumable correlate with EXACT global semantics.
-
-    Naive spatial bucketing breaks the matching: a displacement chain (or
-    simply a best match) can cross any fixed geographic boundary. The
-    correct unit of checkpointing is a CONNECTED COMPONENT of the
-    candidate graph (all strength-carrying pairs within seek_distance): no
-    candidate edge crosses components, so the matching decomposes exactly.
-
-    Execution is two-phase by measured component structure (BENCH.md §4:
-    tens of thousands of components, p50 ~20 nodes, plus the occasional
-    dense giant):
-
-    - SMALL components (candidate pairs <= small_component_max_pairs) are
-      solved inside single Arrow tasks — a grouped applyInPandas whose
-      one vectorized solver call covers every component of its group —
-      and written for ALL
-      pending hash buckets in ONE single-pass job. Wall time no longer
-      scales with component COUNT (VERDICT r3 item 1); candidate-less
-      singletons don't even enter the grouped map (native expressions).
-    - Each LARGE component gets its own dedicated bucket id
-      (n_buckets + rank) and runs the distributed DA loop — the only
-      place per-round driver latency is still paid, reserved for the
-      handful of Riga-hotspot-style giants that are genuinely one big
-      matching problem.
-
-    Both phases share one staged slim input (elements/items/pairs rows
-    partitioned by bucket — every per-bucket read is partition-pruned)
-    and one progress table; crash/resume semantics come from
-    CheckpointedRun's idempotent dynamic-overwrite writes.
-
-    Returns the unified correlations DataFrame (== correlate(...)
-    .correlations on the same inputs).
-    """
+    small_component_max_pairs: int,
+    fingerprint: str,
+    pt: dict,
+) -> tuple[DataFrame, int, list[int]]:
+    """Build and stage `checkpointed_correlate`'s one slim input table:
+    element, item and pair rows tagged with their candidate component and
+    bucket. Returns the staged frame, the candidate-pair count and the
+    dedicated buckets of the big components."""
     from osmalyzer_spark.operators.dedup import connected_components_star
 
-    p = params or CorrelatorParams()
-    if p.match_anywhere:
-        raise ValueError("checkpointed_correlate requires distance-bounded matching")
-    if p.lone_upgrade_unbounded:
-        raise ValueError(
-            "unbounded lone upgrades can cross candidate components; use a "
-            "bounded radius <= seek_distance"
-        )
-    if p.lone_upgrade_radius_m is not None and p.lone_upgrade_radius_m > p.seek_distance:
-        raise ValueError("lone_upgrade_radius_m beyond seek_distance crosses components")
-
-    pt = phase_times if phase_times is not None else {}
     t0 = time.time()
     elems_slim, items_slim, pairs_all = _slim_inputs(spark, elements, items, p)
     pairs_all = truncate(pairs_all)  # reused 3x below
@@ -1070,13 +1028,101 @@ def checkpointed_correlate(
     # ONE staged slim table, partitioned by bucket: every per-bucket read
     # below is partition-pruned (plan-asserted in tests)
     t0 = time.time()
+    big_buckets = sorted(big_bucket.values())
     staged = ck.stage_bucketed(
         spark,
         e_rows.unionByName(i_rows).unionByName(p_rows),
         "corr_input",
-        fingerprint=input_snapshot,
+        fingerprint=fingerprint,
+        info={"n_pairs": n_pairs_all, "big_buckets": big_buckets},
     )
     pt["staging_s"] = round(time.time() - t0, 2)
+    return staged, n_pairs_all, big_buckets
+
+
+def checkpointed_correlate(
+    spark: SparkSession,
+    elements: DataFrame,
+    items: DataFrame,
+    params: "CorrelatorParams | None",
+    ck,
+    small_component_max_pairs: int = 200_000,
+    input_snapshot: str = "",
+    fail_after_batches: int | None = None,  # crash-simulation test hook (big phase)
+    fail_small_before_progress: bool = False,  # crash-simulation hook (small phase)
+    phase_times: dict | None = None,  # filled with per-phase wall seconds
+) -> DataFrame:
+    """Resumable correlate with EXACT global semantics.
+
+    Naive spatial bucketing breaks the matching: a displacement chain (or
+    simply a best match) can cross any fixed geographic boundary. The
+    correct unit of checkpointing is a CONNECTED COMPONENT of the
+    candidate graph (all strength-carrying pairs within seek_distance): no
+    candidate edge crosses components, so the matching decomposes exactly.
+
+    Execution is two-phase by measured component structure (BENCH.md §4:
+    tens of thousands of components, p50 ~20 nodes, plus the occasional
+    dense giant):
+
+    - SMALL components (candidate pairs <= small_component_max_pairs) are
+      solved inside single Arrow tasks — a grouped applyInPandas whose
+      one vectorized solver call covers every component of its group —
+      and written for ALL
+      pending hash buckets in ONE single-pass job. Wall time no longer
+      scales with component COUNT (VERDICT r3 item 1); candidate-less
+      singletons don't even enter the grouped map (native expressions).
+    - Each LARGE component gets its own dedicated bucket id
+      (n_buckets + rank) and runs the distributed DA loop — the only
+      place per-round driver latency is still paid, reserved for the
+      handful of Riga-hotspot-style giants that are genuinely one big
+      matching problem.
+
+    Both phases share one staged slim input (elements/items/pairs rows
+    partitioned by bucket — every per-bucket read is partition-pruned)
+    and one progress table; crash/resume semantics come from
+    CheckpointedRun's idempotent dynamic-overwrite writes. A resume reads
+    the staging marker first: when it matches, the staged table, the pair
+    count and the big-component buckets recorded with it are used as they
+    are, and the slim inputs, connected components and tagging are not
+    recomputed (`phase_times["staging_reused"]`).
+
+    Returns the unified correlations DataFrame (== correlate(...)
+    .correlations on the same inputs).
+    """
+    p = params or CorrelatorParams()
+    if p.match_anywhere:
+        raise ValueError("checkpointed_correlate requires distance-bounded matching")
+    if p.lone_upgrade_unbounded:
+        raise ValueError(
+            "unbounded lone upgrades can cross candidate components; use a "
+            "bounded radius <= seek_distance"
+        )
+    if p.lone_upgrade_radius_m is not None and p.lone_upgrade_radius_m > p.seek_distance:
+        raise ValueError("lone_upgrade_radius_m beyond seek_distance crosses components")
+
+    pt = phase_times if phase_times is not None else {}
+    # the layout depends on the bucket count and the big-component bound
+    # too, so a resume with other values must not reuse it
+    fingerprint = json.dumps(
+        [input_snapshot, ck.n_buckets, small_component_max_pairs]
+    )
+    t0 = time.time()
+    hit = ck.staged(spark, "corr_input", fingerprint=fingerprint)
+    pt["staging_reused"] = hit is not None
+    if hit is None:
+        staged, n_pairs_all, big_buckets = _stage_corr_input(
+            spark, elements, items, p, ck, small_component_max_pairs,
+            fingerprint, pt,
+        )
+    else:
+        # a resume: the staged layout already holds the slim inputs, the
+        # component tags and the bucket ids, and the marker holds the
+        # pair count and the big-component buckets it was built with
+        staged, info = hit
+        n_pairs_all, big_buckets = info["n_pairs"], info["big_buckets"]
+        pt["staging_s"] = round(time.time() - t0, 2)
+    # recorded before the phases, so a crash in them still reports it
+    pt["n_big_components"] = len(big_buckets)
 
     solver = _make_component_solver(p)
     drop_outside = p.polygon is None or not p.report_outside_polygon
@@ -1151,7 +1197,7 @@ def checkpointed_correlate(
     # phase B: each giant component = one dedicated bucket through the
     # distributed DA loop (few of these by construction)
     t0 = time.time()
-    if big_bucket:
+    if big_buckets:
 
         def process_big(df: DataFrame, bucket: int) -> DataFrame:
             eb = df.filter(F.col("__side") == "e").select("elem_id", "__lone")
@@ -1167,13 +1213,12 @@ def checkpointed_correlate(
             process_big,
             bucket_expr=F.col("__cbucket"),
             input_snapshot=input_snapshot,
-            buckets=sorted(big_bucket.values()),
+            buckets=big_buckets,
             fail_after_batches=fail_after_batches,
         )
     elif fail_after_batches is not None and fail_after_batches <= 0:
         raise RuntimeError("simulated crash before batch 0")
     pt["big_da_s"] = round(time.time() - t0, 2)
-    pt["n_big_components"] = len(big_bucket)
     return result
 
 

@@ -413,9 +413,12 @@ def test_checkpointed_correlate_crash_resume_big_phase(spark, tmp_path):
     through the distributed big-component phase (one dedicated bucket
     each). Crash after 2 big buckets; done = all 4 small buckets (phase A)
     + 2 big; the resumed run completes the rest and equals the global
-    answer. Also proves the big-path _assign on slim staged rows."""
+    answer. Also proves the big-path _assign on slim staged rows, and
+    that the resume reuses the staged layout: connected components raise
+    if called, yet the answer and the big-component count are unchanged."""
     import pytest as _pytest
 
+    import osmalyzer_spark.operators.dedup as dedup
     from osmalyzer_spark.checkpoint import CheckpointedRun
     from osmalyzer_spark.operators.correlator import checkpointed_correlate
 
@@ -424,18 +427,30 @@ def test_checkpointed_correlate_crash_resume_big_phase(spark, tmp_path):
     expected = _corr_rows(correlate(spark, edf, idf, params).correlations)
 
     ck = CheckpointedRun(str(tmp_path / "ckb"), run_id="cc3", n_buckets=4, buckets_per_batch=1)
+    crash_pt, resume_pt = {}, {}
     with _pytest.raises(RuntimeError, match="simulated crash"):
         checkpointed_correlate(
             spark, edf, idf, params, ck,
             small_component_max_pairs=0, fail_after_batches=2,
+            phase_times=crash_pt,
         )
     assert len(ck.done_buckets(spark)) == 4 + 2  # 12 pair components are big
-    got = _corr_rows(
-        checkpointed_correlate(
-            spark, edf, idf, params, ck, small_component_max_pairs=0
+    assert crash_pt["staging_reused"] is False
+
+    def no_cc(*a, **kw):
+        raise AssertionError("resume recomputed the connected components")
+
+    with _pytest.MonkeyPatch.context() as mp:
+        mp.setattr(dedup, "connected_components_star", no_cc)
+        got = _corr_rows(
+            checkpointed_correlate(
+                spark, edf, idf, params, ck, small_component_max_pairs=0,
+                phase_times=resume_pt,
+            )
         )
-    )
     assert got == expected
+    assert resume_pt["staging_reused"] is True
+    assert resume_pt["n_big_components"] == crash_pt["n_big_components"] == 12
 
 
 def test_checkpointed_correlate_rejects_unbounded_upgrade(spark, tmp_path):

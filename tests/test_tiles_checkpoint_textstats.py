@@ -166,6 +166,84 @@ def test_checkpoint_single_pass_crash_window_resume(spark, tmp_out):
     assert out.exceptAll(fresh).count() == 0 and fresh.exceptAll(out).count() == 0
 
 
+def _garble(path):
+    """Overwrite the record at `path` (a file, or every visible file under
+    a directory) with bytes no reader parses, and drop the checksum
+    sidecars so the parse, not a checksum, is what fails."""
+    import os
+
+    if os.path.isfile(path):
+        files = [path]
+    else:
+        files = [os.path.join(d, f) for d, _, fs in os.walk(path) for f in fs]
+    for f in files:
+        name = os.path.basename(f)
+        if f == path or not name.startswith((".", "_")):
+            crc = os.path.join(os.path.dirname(f), f".{name}.crc")
+            if os.path.exists(crc):
+                os.remove(crc)
+            with open(f, "wb") as fh:
+                fh.write(b"\x00not a checkpoint record\xff")
+
+
+def test_checkpoint_unreadable_metadata_raises(spark, tmp_out):
+    """A progress record or a staging marker that exists but cannot be
+    read must fail loudly: read as "absent", every bucket would be
+    recomputed (duplicating its lineage rows) or the staging rebuilt."""
+    import os
+
+    ck = CheckpointedRun(tmp_out, run_id="um1", n_buckets=2)
+    ck._write_progress(spark, [("um1", 0, 1, 1, 5, "", 0.0)])
+    assert ck.done_buckets(spark) == {0}
+    _garble(os.path.join(tmp_out, "_progress"))
+    with pytest.raises(Exception):
+        ck.done_buckets(spark)
+
+    df = spark.range(4).withColumn("__cbucket", (F.col("id") % 2).cast("int"))
+    ck.stage_bucketed(spark, df, "side")
+    _garble(os.path.join(tmp_out, "staged", "um1", "side", "_STAGED"))
+    with pytest.raises(Exception):
+        ck.stage_bucketed(spark, df, "side")
+
+
+def test_checkpoint_metadata_starts_no_spark_job(spark, tmp_out):
+    """Progress probes, marker IO and the schema-given read-backs run on
+    the driver through the Hadoop FileSystem: none starts a Spark job, on
+    a fresh checkpoint or on a written one."""
+    import os
+
+    from osmalyzer_spark.checkpoint import _read_value, _write_value
+
+    sc = spark.sparkContext
+    ck = CheckpointedRun(tmp_out, run_id="nj1", n_buckets=2)
+    marker = os.path.join(tmp_out, "_marker")
+    try:
+        sc.setJobGroup("ckpt-fresh", "metadata on a fresh checkpoint")
+        assert ck.done_buckets(spark) == set()
+        assert ck.staged(spark, "side") is None
+        assert _read_value(spark, marker) is None
+        _write_value(spark, "m", marker)
+
+        sc.setJobGroup("ckpt-write", "writes the checkpoint")
+        ck.run_single_pass(spark, _inp(spark), _process, bucket_expr=F.pmod(F.col("id"), F.lit(2)))
+        df = spark.range(4).withColumn("__cbucket", (F.col("id") % 2).cast("int"))
+        ck.stage_bucketed(spark, df, "side")
+
+        sc.setJobGroup("ckpt-written", "metadata on a written checkpoint")
+        assert ck.done_buckets(spark) == {0, 1}
+        assert _read_value(spark, marker) == "m"
+        _write_value(spark, "m2", marker + "2")
+        ck.metrics(spark)
+        ck._read_data(spark)
+        ck.staged(spark, "side")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    assert tracker.getJobIdsForGroup("ckpt-write")  # the guard sees jobs
+    assert tracker.getJobIdsForGroup("ckpt-fresh") == []
+    assert tracker.getJobIdsForGroup("ckpt-written") == []
+
+
 def test_checkpoint_corrupt_data_raises(spark, tmp_out):
     """A data directory that exists but cannot be read must fail loudly:
     reading it as "no rows" would drop buckets the progress table calls
