@@ -37,10 +37,11 @@ Two execution paths:
   (row-local, or grouping only within keys that never straddle buckets
   — true for any per-cell operator, since buckets are unions of cells).
 - `run` (per-bucket loop): for operators that must see exactly one
-  bucket per call — e.g. the correlator co-bucketing a second input via
-  `process(df, bucket=b)`. This path filters the input once PER BUCKET;
-  at scale the input must be stored pre-partitioned by the bucket key so
-  each filter is a partition-pruned read, not a full scan.
+  bucket per call — e.g. the correlator's distributed matching of one
+  giant component. This path filters the input once PER BUCKET; at
+  scale the input must be stored pre-partitioned by the bucket key
+  (`stage_bucketed`) so each filter is a partition-pruned read, not a
+  full scan.
 
 This is deliberately a batch driver, not Structured Streaming — the
 reference is a daily batch job (its dated-cache incrementality,
@@ -66,6 +67,8 @@ PROGRESS_SCHEMA = (
     "wall_ms long, input_snapshot string, batch_ts double"
 )
 _PROGRESS_COLUMNS = [c.split()[0] for c in PROGRESS_SCHEMA.split(", ")]
+# the bucket column `stage_bucketed` partitions a staged table by
+_STAGE_BUCKET = "__cbucket"
 
 
 def _dynamic_overwrite(spark: SparkSession):
@@ -221,7 +224,6 @@ class CheckpointedRun:
         self,
         spark: SparkSession,
         name: str,
-        bucket_col: str = "__cbucket",
         fingerprint: str = "",
         schema: StructType | None = None,
     ) -> tuple[DataFrame, dict] | None:
@@ -252,19 +254,18 @@ class CheckpointedRun:
         out = spark.read.schema(recorded).parquet(path)
         # a generic bucket column may be wider than int; a cast of a
         # partition column still partition-prunes
-        return out.withColumn(bucket_col, F.col(bucket_col).cast("int")), marker["info"]
+        return out.withColumn(_STAGE_BUCKET, F.col(_STAGE_BUCKET).cast("int")), marker["info"]
 
     def stage_bucketed(
         self,
         spark: SparkSession,
         df: DataFrame,
         name: str,
-        bucket_col: str = "__cbucket",
         fingerprint: str = "",
         info: dict | None = None,
     ) -> DataFrame:
-        """Persist a bucketed input partitioned by its bucket column and
-        read it back, so every downstream `filter(bucket_col == b)` is a
+        """Persist a bucketed input partitioned by its `__cbucket` column
+        and read it back, so every downstream `filter(__cbucket == b)` is a
         PARTITION-PRUNED read of one directory — not a rescan of the whole
         input (the scale requirement `run`'s docstring demands; this
         method is how the engine itself satisfies it).
@@ -282,14 +283,14 @@ class CheckpointedRun:
         beyond the schema. `staged` reads a finished staging back without
         the input frame.
         """
-        hit = self.staged(spark, name, bucket_col, fingerprint, df.schema)
+        hit = self.staged(spark, name, fingerprint, df.schema)
         if hit is not None:
             return hit[0]
         path = self._staging_path(name)
         (
-            df.repartition(F.col(bucket_col))
+            df.repartition(F.col(_STAGE_BUCKET))
             .write.mode("overwrite")
-            .partitionBy(bucket_col)
+            .partitionBy(_STAGE_BUCKET)
             .parquet(path)
         )
         # our own completion marker: dynamic partitionOverwriteMode (set
@@ -303,7 +304,7 @@ class CheckpointedRun:
             "info": info or {},
         }
         _write_value(spark, json.dumps(marker, sort_keys=True), os.path.join(path, "_STAGED"))
-        return self.staged(spark, name, bucket_col, fingerprint, df.schema)[0]
+        return self.staged(spark, name, fingerprint, df.schema)[0]
 
     def run_single_pass(
         self,
@@ -437,12 +438,11 @@ class CheckpointedRun:
 
         bucket_expr: Column -> int bucket in [0, n_buckets) — usually
         pmod(cell_id or xxhash64(id), n_buckets). `process` maps a bucket
-        slice to its output (no `__bucket` column; it is attached here);
-        `process(df, bucket=b)` lets the caller co-bucket side inputs
-        (e.g. the correlator's item table). At scale, store the input
-        pre-partitioned by the bucket key so the per-bucket filter is a
-        pruned read — this loop scans the input once per bucket
-        otherwise (use run_single_pass for bucket-distributive work).
+        slice to its output (no `__bucket` column; it is attached here).
+        At scale, store the input pre-partitioned by the bucket key so
+        the per-bucket filter is a pruned read — this loop scans the
+        input once per bucket otherwise (use run_single_pass for
+        bucket-distributive work).
 
         `fail_after_batches` simulates a crash before a batch;
         `fail_before_progress_batch` simulates one after a batch's data
@@ -450,8 +450,6 @@ class CheckpointedRun:
 
         Returns the complete output DataFrame (all buckets of run_id).
         """
-        import inspect
-
         _dynamic_overwrite(spark)
         inp = inp.withColumn("__bucket", bucket_expr.cast("int"))
         done = self.done_buckets(spark)
@@ -461,7 +459,6 @@ class CheckpointedRun:
             pending[i : i + self.buckets_per_batch]
             for i in range(0, len(pending), self.buckets_per_batch)
         ]
-        wants_bucket = "bucket" in inspect.signature(process).parameters
         for bi, batch in enumerate(batches):
             if fail_after_batches is not None and bi >= fail_after_batches:
                 raise RuntimeError(f"simulated crash before batch {bi}")
@@ -470,12 +467,9 @@ class CheckpointedRun:
                 t0 = time.time()
                 slice_df = inp.filter(F.col("__bucket") == b).persist()
                 rows_in = slice_df.count()
-                produced = (
-                    process(slice_df.drop("__bucket"), bucket=int(b))
-                    if wants_bucket
-                    else process(slice_df.drop("__bucket"))
+                out = process(slice_df.drop("__bucket")).withColumn(
+                    "__bucket", F.lit(int(b))
                 )
-                out = produced.withColumn("__bucket", F.lit(int(b)))
                 self._write_schema_once(spark, out)
                 # rows_out rides the write job as an observed count (one
                 # consumer, so the metric is exact) instead of re-reading

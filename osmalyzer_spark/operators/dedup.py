@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
 from osmalyzer_spark.lineage import truncate
+from osmalyzer_spark.session import data_partitions, shuffle_partitions
 
 _MERSENNE = (1 << 61) - 1
 # star rounds are O(log n); the 1M/775 m giant component takes 8
@@ -427,79 +428,56 @@ def connected_components_star(
     12M-edge solve at ~40 s on one core, while the distributed star
     rounds — with lazy per-round checkpoints — clear a 4.8M-edge
     geometric graph in ~7 s at local[8] (measured round 5), so beyond a
-    few million edges the cluster path wins even at low parallelism. Labels are identical to the distributed
-    path's; rounds reports 0. Pass local_edge_threshold=0 to force the
-    distributed star rounds (tests of the scale path do).
+    few million edges the cluster path wins even at low parallelism.
+    Labels are identical to the distributed path's; rounds reports 0.
+    Pass local_edge_threshold=0 to force the distributed star rounds
+    (tests of the scale path do).
 
-    `edge_counts_out`: optional dict the DRIVER-LOCAL path fills with
+    `edge_counts_out`: optional dict the driver-local path fills with
     {component id: number of input edge rows (duplicates included)} —
     a free byproduct of the numpy solve that lets a caller who fed one
     edge row per candidate pair skip its own per-component sizing join.
-    The distributed path leaves it untouched (caller falls back).
+    It is filled only when the solve read those per-pair rows (taken
+    through `edge_count_bound`); a solve of the deduplicated edge set
+    and the distributed path leave it untouched (caller falls back).
     """
     spark = pairs.sparkSession
     raw = pairs.select(
         F.least("id_a", "id_b").alias("a"), F.greatest("id_a", "id_b").alias("b")
     ).filter(F.col("a") != F.col("b"))
-    if edge_count_bound is not None and edge_count_bound <= local_edge_threshold:
-        # the caller already knows an upper bound on the edge count (e.g.
-        # the candidate-pair count it just materialized): take the local
-        # path directly, skipping the distinct shuffle and the sizing
-        # count — _local_components' scatter-min is idempotent under
-        # duplicate edges, so labels are identical
-        pdf = raw.toPandas()
-        nodes, label, ia = _local_components(pdf)
-        if edge_counts_out is not None and len(pdf):
-            comps_u, counts = np.unique(nodes[label[ia]], return_counts=True)
-            edge_counts_out.update(
-                (c.item() if hasattr(c, "item") else c, int(n))
-                for c, n in zip(comps_u, counts)
-            )
-        out_pdf = pd.DataFrame({"id": nodes, "component": nodes[label]})
-        id_type = raw.schema["a"].dataType
-        out = spark.createDataFrame(
-            out_pdf,
-            schema=T.StructType(
-                [
-                    T.StructField("id", id_type),
-                    T.StructField("component", id_type),
-                ]
-            ),
+    # the caller already knows an upper bound on the edge count (e.g. the
+    # candidate-pair count it just materialized): take the local path
+    # directly, skipping the distinct shuffle and the sizing count —
+    # _local_components' scatter-min is idempotent under duplicate edges,
+    # so labels are identical
+    per_pair = edge_count_bound is not None and edge_count_bound <= local_edge_threshold
+    e = raw
+    if not per_pair:
+        e = truncate(raw.distinct())  # the sizing count below materializes it
+        # the ~6 shuffles per star round are sized from the EDGE COUNT,
+        # not the cluster (`data_partitions`)
+        n_edges = e.count()
+        if n_edges > local_edge_threshold:
+            cc_parts = data_partitions(n_edges)
+            with shuffle_partitions(spark, cc_parts):
+                return _star_rounds(e.coalesce(cc_parts), with_rounds, cc_parts)
+    pdf = e.toPandas()
+    nodes, label, ia = _local_components(pdf)
+    # only per-pair (not deduplicated) edge rows count the caller's pairs
+    if per_pair and edge_counts_out is not None and len(pdf):
+        comps_u, counts = np.unique(nodes[label[ia]], return_counts=True)
+        edge_counts_out.update(
+            (c.item() if hasattr(c, "item") else c, int(n))
+            for c, n in zip(comps_u, counts)
         )
-        return (out, 0) if with_rounds else out
-    e = truncate(raw.distinct())  # the sizing count below materializes it
-    # Size the ~6 shuffles per star round from the EDGE COUNT, not the
-    # cluster: with session (cluster-sized) shuffle partitioning the
-    # fixed O(log n) rounds cost more wall on MORE cores (VERDICT r4
-    # item 4 measured 2->8 anti-scaling); a data-proportional constant
-    # keeps every round's plan identical at N and 4N executors.
-    n_edges = e.count()
-    if n_edges <= local_edge_threshold:
-        # NOT filling edge_counts_out here: this branch solves the
-        # DEDUPLICATED edge set, so its per-component edge counts are
-        # not the caller's per-pair counts
-        pdf = e.toPandas()
-        nodes, label, _ = _local_components(pdf)
-        out_pdf = pd.DataFrame({"id": nodes, "component": nodes[label]})
-        id_type = e.schema["a"].dataType
-        out = spark.createDataFrame(
-            out_pdf,
-            schema=T.StructType(
-                [
-                    T.StructField("id", id_type),
-                    T.StructField("component", id_type),
-                ]
-            ),
-        )
-        return (out, 0) if with_rounds else out
-    cc_parts = max(4, min(4096, -(-n_edges // 250_000)))
-    e = e.coalesce(cc_parts)
-    orig_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(cc_parts))
-    try:
-        return _star_rounds(e, with_rounds, cc_parts)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", orig_sp)
+    id_type = raw.schema["a"].dataType
+    out = spark.createDataFrame(
+        pd.DataFrame({"id": nodes, "component": nodes[label]}),
+        schema=T.StructType(
+            [T.StructField("id", id_type), T.StructField("component", id_type)]
+        ),
+    )
+    return (out, 0) if with_rounds else out
 
 
 def _star_rounds(e: DataFrame, with_rounds: bool, cc_parts: int):

@@ -8,6 +8,7 @@ joins re-plan at runtime; Arrow is on for the pandas-UDF slow path.
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -48,3 +49,26 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def data_partitions(n_rows: int) -> int:
+    """A partition count proportional to `n_rows` (~250k rows each,
+    4..4096). Iterative jobs (DA rounds, star CC rounds) size their
+    partitioning from the data, not the cluster: with cluster-sized
+    shuffle partitioning their fixed round counts cost more wall on more
+    cores (VERDICT r4 item 4 measured 2->8-core anti-scaling), while a
+    data-proportional count keeps every round's plan identical at N and
+    4N executors."""
+    return max(4, min(4096, -(-n_rows // 250_000)))
+
+
+@contextmanager
+def shuffle_partitions(spark: SparkSession, n: int):
+    """Pin `spark.sql.shuffle.partitions` to `n` for the block and
+    restore the session's value afterwards."""
+    orig = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", orig)

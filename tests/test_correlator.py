@@ -219,6 +219,24 @@ def test_scene_polygon_prefilter(spark):
     assert kinds.get("outside_bounds") == 1
 
 
+def test_polygon_correlate_leaves_no_cached_frame(spark):
+    """The polygon prefilter is evaluated inside the one truncation of the
+    items: a correlate with a polygon registers nothing with the
+    session's cache manager, which nothing would ever release."""
+    box = Polygon(
+        outers=[np.array([(56.0, 23.0), (56.0, 25.0), (58.0, 25.0), (58.0, 23.0)])],
+        polygon_id="bounds",
+    )
+    e1 = dict(elem_id=1, **dict(zip(("lat", "lon"), at(0, 0))))
+    i_in = dict(item_id="in", **dict(zip(("lat", "lon"), at(0, 10))))
+    i_out = dict(item_id="out", lat=59.5, lon=24.0)
+    edf, idf = make_dfs(spark, [e1], [i_in, i_out])
+    spark.catalog.clearCache()
+    rows = correlate(spark, edf, idf, CorrelatorParams(polygon=box)).correlations.collect()
+    assert {r["kind"] for r in rows} == {"matched", "outside_bounds"}
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_match_anywhere(spark):
     """matchAnywhere: distance ignored, first (lowest-id) element wins."""
     e1 = dict(elem_id=7, tag="T", lat=56.0, lon=24.0)
@@ -409,13 +427,15 @@ def test_checkpointed_correlate_crash_resume_small_phase(spark, tmp_path):
 
 
 def test_checkpointed_correlate_crash_resume_big_phase(spark, tmp_path):
-    """small_component_max_pairs=0 forces every pair-bearing component
+    """da_local_pair_threshold=0 forces every pair-bearing component
     through the distributed big-component phase (one dedicated bucket
     each). Crash after 2 big buckets; done = all 4 small buckets (phase A)
     + 2 big; the resumed run completes the rest and equals the global
     answer. Also proves the big-path _assign on slim staged rows, and
     that the resume reuses the staged layout: connected components raise
     if called, yet the answer and the big-component count are unchanged."""
+    import dataclasses
+
     import pytest as _pytest
 
     import osmalyzer_spark.operators.dedup as dedup
@@ -425,13 +445,13 @@ def test_checkpointed_correlate_crash_resume_big_phase(spark, tmp_path):
     edf, idf = _crash_scene(spark)
     params = CorrelatorParams(match_distance=15, unmatch_distance=75)
     expected = _corr_rows(correlate(spark, edf, idf, params).correlations)
+    params = dataclasses.replace(params, da_local_pair_threshold=0)
 
     ck = CheckpointedRun(str(tmp_path / "ckb"), run_id="cc3", n_buckets=4, buckets_per_batch=1)
     crash_pt, resume_pt = {}, {}
     with _pytest.raises(RuntimeError, match="simulated crash"):
         checkpointed_correlate(
-            spark, edf, idf, params, ck,
-            small_component_max_pairs=0, fail_after_batches=2,
+            spark, edf, idf, params, ck, fail_after_batches=2,
             phase_times=crash_pt,
         )
     assert len(ck.done_buckets(spark)) == 4 + 2  # 12 pair components are big
@@ -444,13 +464,50 @@ def test_checkpointed_correlate_crash_resume_big_phase(spark, tmp_path):
         mp.setattr(dedup, "connected_components_star", no_cc)
         got = _corr_rows(
             checkpointed_correlate(
-                spark, edf, idf, params, ck, small_component_max_pairs=0,
-                phase_times=resume_pt,
+                spark, edf, idf, params, ck, phase_times=resume_pt,
             )
         )
     assert got == expected
     assert resume_pt["staging_reused"] is True
     assert resume_pt["n_big_components"] == crash_pt["n_big_components"] == 12
+
+
+def test_checkpointed_correlate_splits_at_pair_threshold(spark, tmp_path):
+    """One bound splits the phases: components with more candidate pairs
+    than da_local_pair_threshold get their own big bucket, the rest go
+    through the grouped-map solver. Eleven clusters 3 km apart, each a
+    complete candidate graph of n_e x n_i pairs (every point within 20 m
+    of its centre): three clusters of 9 or 12 pairs sit above a bound of
+    6, eight of 1-6 pairs at or below it, and the answer is correlate()'s."""
+    import dataclasses
+
+    from osmalyzer_spark.checkpoint import CheckpointedRun
+    from osmalyzer_spark.operators.correlator import checkpointed_correlate
+
+    rng = np.random.default_rng(3)
+    sizes = [(3, 3), (3, 4), (4, 3), (1, 1), (2, 2), (2, 3), (3, 2), (1, 4),
+             (6, 1), (1, 2), (2, 1)]
+    elements, items = [], []
+    for c, (n_e, n_i) in enumerate(sizes):
+        for _ in range(n_e):
+            elements.append(dict(elem_id=len(elements), **dict(zip(("lat", "lon"), at(
+                float(rng.uniform(-10, 10)), c * 3000.0 + float(rng.uniform(-10, 10)))))))
+        for _ in range(n_i):
+            items.append(dict(item_id=f"i{len(items):03d}", **dict(zip(("lat", "lon"), at(
+                float(rng.uniform(-10, 10)), c * 3000.0 + float(rng.uniform(-10, 10)))))))
+    edf, idf = make_dfs(spark, elements, items)
+    params = CorrelatorParams(match_distance=15, unmatch_distance=75)
+    expected = _corr_rows(correlate(spark, edf, idf, params).correlations)
+
+    ck = CheckpointedRun(str(tmp_path / "cks"), run_id="t1", n_buckets=4)
+    pt = {}
+    got = _corr_rows(checkpointed_correlate(
+        spark, edf, idf, dataclasses.replace(params, da_local_pair_threshold=6),
+        ck, phase_times=pt,
+    ))
+    assert got == expected
+    assert pt["n_big_components"] == sum(e * i > 6 for e, i in sizes) == 3
+    assert ck.done_buckets(spark) == set(range(4 + 3))
 
 
 def test_checkpointed_correlate_rejects_unbounded_upgrade(spark, tmp_path):
@@ -540,9 +597,9 @@ def test_stage_bucketed_rejects_changed_input(spark, tmp_path):
     assert ck2.stage_bucketed(spark, df2, "side").count() == 50
 
 
-def test_da_shuffle_join_path_matches_broadcast_path(spark):
+def test_da_shuffle_join_path_matches_broadcast_path(spark, monkeypatch):
     """Adversarial shape (items >> elements => round-1 displacement wave
-    creates a large unassigned set): with broadcast_row_limit=0 every
+    creates a large unassigned set): with _BROADCAST_ROW_LIMIT=0 every
     round-state join takes the guarded SHUFFLE path (VERDICT r3 "what's
     wrong" #1) and the matching is identical to the broadcast path."""
     rng = np.random.default_rng(404)
@@ -557,14 +614,14 @@ def test_da_shuffle_join_path_matches_broadcast_path(spark):
                         at(float(rng.uniform(-40, 40)), float(rng.uniform(-40, 250))))))
         for k in range(60)
     ]
+    import osmalyzer_spark.operators.correlator as correlator
+
     edf, idf = make_dfs(spark, elements, items)
     base = correlate(spark, edf, idf, CorrelatorParams(unmatch_distance=75.0))
+    monkeypatch.setattr(correlator, "_BROADCAST_ROW_LIMIT", 0)
     guarded = correlate(
         spark, edf, idf,
-        CorrelatorParams(
-            unmatch_distance=75.0, broadcast_row_limit=0,
-            da_local_pair_threshold=0,
-        ),
+        CorrelatorParams(unmatch_distance=75.0, da_local_pair_threshold=0),
     )
     key = lambda r: (r["elem_id"], r["item_id"], r["strength"], round(r["dist_m"], 9), r["far"])
     assert sorted(map(key, base.matched.collect())) == sorted(
@@ -575,8 +632,7 @@ def test_da_shuffle_join_path_matches_broadcast_path(spark):
     )
     # and the oracle agrees with the guarded path too
     run_both(spark, elements, items,
-             CorrelatorParams(unmatch_distance=75.0, broadcast_row_limit=0,
-                              da_local_pair_threshold=0))
+             CorrelatorParams(unmatch_distance=75.0, da_local_pair_threshold=0))
 
 
 def test_da_local_gate_matches_distributed(spark):
@@ -624,9 +680,10 @@ def test_da_local_gate_matches_distributed(spark):
 
 
 def test_da_gate_probe_overflow_runs_distributed(spark):
-    """A small-but-nonzero da_local_pair_threshold makes the one-action
-    gate probe overflow (len == threshold + 1): the distributed round
-    loop must engage and agree with the driver-local default."""
+    """A small-but-nonzero da_local_pair_threshold (3) sits below the
+    scene's candidate count, so the gate's count() exceeds it: the
+    distributed round loop must engage and agree with the driver-local
+    default."""
     rng = np.random.default_rng(616)
     elements = [
         dict(elem_id=e, tag=str(e % 3),
@@ -646,6 +703,7 @@ def test_da_gate_probe_overflow_runs_distributed(spark):
     overflow = correlate(
         spark, edf, idf, CorrelatorParams(**kw, da_local_pair_threshold=3)
     )
+    assert local.rounds == 0 and overflow.rounds >= 1
     key = lambda r: (r["elem_id"], r["item_id"], r["strength"],
                      round(r["dist_m"], 9), r["far"])
     assert sorted(map(key, local.matched.collect())) == sorted(
