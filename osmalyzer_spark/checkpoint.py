@@ -512,10 +512,9 @@ class CheckpointedRun:
         return self._result(spark)
 
     def metrics(self, spark: SparkSession) -> DataFrame:
-        """The lineage/metrics table for this run."""
-        return (
-            spark.read.schema(PROGRESS_SCHEMA)
-            .option("mode", "FAILFAST")
-            .json(self._progress_path)
-            .filter(F.col("run_id") == self.run_id)
+        """The lineage/metrics table for this run, one row per progress
+        record, parsed on the driver by `_progress_rows`."""
+        return spark.createDataFrame(
+            [tuple(r.get(c) for c in _PROGRESS_COLUMNS) for r in self._progress_rows(spark)],
+            PROGRESS_SCHEMA,
         )

@@ -254,7 +254,7 @@ def extract_audio_features(
 # --------------------------------------------------------------------------
 # Perceptual hash (pHash) — the image analog of simhash: a 64-bit
 # fingerprint whose hamming distance tracks VISUAL similarity, so the
-# banded-LSH machinery (operators/dedup.py simhash_near_pairs) gives
+# banded-LSH machinery (operators/dedup.py banded_pairs) gives
 # image near-dup at corpus scale without any all-pairs comparison.
 # Standard construction (public pHash algorithm): luma -> area-resample
 # to 32x32 -> 2D DCT-II -> top-left 8x8 low-frequency block -> each of
@@ -372,23 +372,20 @@ def phash_images(
 
 
 def phash_near_pairs(
-    fps: DataFrame,
-    id_col: str = "image_id",
-    phash_col: str = "phash64",
-    max_hamming: int = 6,
-    bands: int = 8,
+    fps: DataFrame, max_hamming: int = 6, bands: int = 8
 ) -> DataFrame:
     """COMPLETE set of image pairs with hamming(pHash) <= max_hamming —
-    visual near-duplicate candidates at corpus scale.
+    visual near-duplicate candidates at corpus scale. Input: (image_id,
+    phash64) rows.
 
-    Delegates to the banded-LSH fingerprint join
-    (operators/dedup.py simhash_near_pairs): band buckets bound the
-    candidate set, pigeonhole (bands >= max_hamming + 1) guarantees
-    recall, verification is native bit_count. Output:
-    (id_a, id_b, hamming)."""
+    Delegates to the SimHash fingerprint join (operators/dedup.py
+    simhash_near_pairs), whose candidates come from `banded_pairs`: band
+    buckets bound the candidate set, only ids and band keys go through the
+    band join, pigeonhole (bands >= max_hamming + 1) guarantees recall,
+    verification is native bit_count. Output: (id_a, id_b, hamming)."""
     from osmalyzer_spark.operators.dedup import simhash_near_pairs
 
     renamed = fps.select(
-        F.col(id_col).alias("id"), F.col(phash_col).alias("simhash")
+        F.col("image_id").alias("id"), F.col("phash64").alias("simhash")
     )
     return simhash_near_pairs(renamed, max_hamming=max_hamming, bands=bands)

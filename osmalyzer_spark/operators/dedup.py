@@ -5,12 +5,16 @@ Four tiers, all shuffle-disciplined for 100 TB inputs:
 - exact_dedup: hash-groupBy on a normalization of the text (one shuffle).
 - minhash_lsh: k-shingle MinHash signatures (ONE vectorized pandas UDF),
   then everything JVM-side: band keys via xxhash64 over signature slices,
-  posexplode, equi-join on (band, key), signature-estimated jaccard filter.
+  candidate pairs from `banded_pairs`, signature-estimated jaccard filter.
   Candidate generation never compares all pairs — only bucket collisions.
 - simhash: 64-bit sign-of-weighted-token-hash fingerprint (pandas UDF),
   hamming distance natively via bit_count(a ^ b); candidates from band
   buckets — completeness requires bands >= max_hamming + 1 (pigeonhole),
   enforced.
+
+`banded_pairs` is the one bucket join behind both, and behind the
+embedding LSH/IVF joins in operators/similarity.py: ids and keys through
+the shuffle, payload re-attached by id after the candidate dedup.
 
 Token/shingle hashes are md5-lower-64 (== DuckDB md5_number_lower) so
 every fingerprint is replayable in plain SQL for oracle parity checks.
@@ -165,63 +169,82 @@ def minhash_signatures(
     return df.select(F.col(id_col).alias("id"), sig_udf(F.col(text_col)).alias("sig"))
 
 
+def _banded(keys):
+    """`keys` (one bucket key per band) with each key's band index made part
+    of its value, so two rows collide only on the same band's key."""
+    return F.transform(keys, lambda key, band: F.struct(band, key))
+
+
+def banded_pairs(df: DataFrame, probes: DataFrame | None = None) -> DataFrame:
+    """Candidate pairs of rows that share a bucket key, each side's payload
+    re-attached: the candidate step of every banded join in the engine
+    (MinHash and SimHash bands, hyperplane-LSH tables, IVF lists).
+
+    Each input holds one row per `id`, a `keys` array and payload columns.
+    A banded caller makes the band part of the key value (`_banded`).
+    Only (id, key) rows go through the bucket join; the candidate id pairs
+    are deduplicated, and then each side's payload is joined back by id,
+    once per pair instead of once per shared key. Each input is truncated
+    once, so whatever computes its keys and payload runs once.
+
+    Self join (`probes` None): pairs id_a < id_b of `df`. Two-sided:
+    `probes` (small enough to collect, so broadcast) is side a and `df`
+    side b, pairs id_a != id_b. Output: id_a, id_b, then each payload
+    column c of side a as c_a and of side b as c_b. The caller applies its
+    verify expression and output projection.
+    """
+    side_b = truncate(df)
+    side_a = side_b if probes is None else truncate(probes)
+    keyed_b = side_b.select("id", F.explode("keys").alias("key"))
+    if probes is None:
+        # one keyed frame on both sides: the bucket shuffle is reused
+        ids = (
+            keyed_b.alias("a")
+            .join(keyed_b.alias("b"), "key")
+            .filter(F.col("a.id") < F.col("b.id"))
+        )
+    else:
+        keyed_a = side_a.select("id", F.explode("keys").alias("key"))
+        ids = (
+            keyed_b.alias("b")
+            .join(F.broadcast(keyed_a.alias("a")), "key")
+            .filter(F.col("a.id") != F.col("b.id"))
+        )
+    ids = ids.select(
+        F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b")
+    ).dropDuplicates()
+    pay_a = side_a.drop("keys").alias("a")
+    pay_b = side_b.drop("keys").alias("b")
+    if probes is not None:
+        pay_a = F.broadcast(pay_a)
+    return (
+        ids.join(pay_a, F.col("id_a") == F.col("a.id"))
+        .join(pay_b, F.col("id_b") == F.col("b.id"))
+        .select(
+            "id_a",
+            "id_b",
+            *[F.col(f"a.{c}").alias(f"{c}_a") for c in pay_a.columns if c != "id"],
+            *[F.col(f"b.{c}").alias(f"{c}_b") for c in pay_b.columns if c != "id"],
+        )
+    )
+
+
 def minhash_lsh_pairs(
-    sigs: DataFrame,
-    bands: int = 16,
-    threshold: float = 0.5,
-    num_hashes: int | None = None,
+    sigs: DataFrame, bands: int, threshold: float, num_hashes: int
 ) -> DataFrame:
     """Candidate pairs from LSH banding + signature-estimated jaccard.
 
     Output: (id_a, id_b, est_jaccard) with est_jaccard >= threshold.
-    All JVM-side: band keys are xxhash64 over signature slices.
-
-    num_hashes: signature length; pass it when known (minhash_dedup does)
-    to avoid the probe action. When omitted it is probed with first(),
-    and an empty input yields an empty result instead of an error.
+    All JVM-side: band keys are xxhash64 over signature slices, and only
+    (id, band key) rows go through the band join (`banded_pairs`).
     """
-    if num_hashes is None:
-        row = sigs.select("sig").first()
-        if row is None:  # empty corpus (e.g. quality gate dropped everything)
-            spark = sigs.sparkSession
-            return spark.createDataFrame(
-                [],
-                T.StructType(
-                    [
-                        T.StructField("id_a", sigs.schema["id"].dataType),
-                        T.StructField("id_b", sigs.schema["id"].dataType),
-                        T.StructField("est_jaccard", T.DoubleType()),
-                    ]
-                ),
-            )
-        num_hashes = len(row["sig"])
     if num_hashes % bands:
         raise ValueError(f"num_hashes {num_hashes} not divisible by bands {bands}")
-    # four consumers (both sides of the band self-join + both signature
-    # re-joins): truncate so the signature UDF runs once, not per branch
-    sigs = truncate(sigs)
     r = num_hashes // bands
     band_keys = F.array(
-        *[
-            F.xxhash64(F.slice("sig", i * r + 1, r), F.lit(i))
-            for i in range(bands)
-        ]
+        *[F.xxhash64(F.slice("sig", i * r + 1, r), F.lit(i)) for i in range(bands)]
     )
-    # band join ships only (id, band, key) — the wide signatures are
-    # re-joined by id AFTER candidate dedup, cutting the candidate-stage
-    # shuffle bytes by ~bands x sig-width
-    exploded = sigs.select("id", F.posexplode(band_keys).alias("band", "key"))
-    a = exploded.select(F.col("id").alias("id_a"), "band", "key")
-    b = exploded.select(F.col("id").alias("id_b"), "band", "key")
-    cand_ids = (
-        a.join(b, ["band", "key"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    sa = sigs.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
-    sb = sigs.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"))
-    cand = cand_ids.join(sa, "id_a").join(sb, "id_b")
+    cand = banded_pairs(sigs.select("id", _banded(band_keys).alias("keys"), "sig"))
     est = (
         F.aggregate(
             F.zip_with("sig_a", "sig_b", lambda x, y: (x == y).cast("int")),
@@ -284,14 +307,15 @@ def simhash_fingerprints(
     return df.select(F.col(id_col).alias("id"), sim_udf(F.col(text_col)).alias("simhash"))
 
 
-def simhash_near_pairs(fps: DataFrame, max_hamming: int = 3, bands: int = 4) -> DataFrame:
+def simhash_near_pairs(fps: DataFrame, max_hamming: int, bands: int) -> DataFrame:
     """COMPLETE set of pairs with hamming(simhash_a, simhash_b) <= max_hamming.
 
-    Candidates via band buckets over the 64-bit fingerprint; by pigeonhole
-    a pair with <= bands-1 differing bits must share at least one intact
-    band, so completeness REQUIRES bands >= max_hamming + 1 (enforced).
-    Verification is native bit_count(a ^ b). Band widths are
-    ceil/floor(64/bands) — uneven widths are fine, only coverage matters.
+    Candidates via band buckets over the 64-bit fingerprint
+    (`banded_pairs`); by pigeonhole a pair with <= bands-1 differing bits
+    must share at least one intact band, so completeness REQUIRES
+    bands >= max_hamming + 1 (enforced). Verification is native
+    bit_count(a ^ b). Band widths are ceil/floor(64/bands) — uneven widths
+    are fine, only coverage matters.
     """
     if bands < max_hamming + 1:
         raise ValueError(
@@ -303,21 +327,16 @@ def simhash_near_pairs(fps: DataFrame, max_hamming: int = 3, bands: int = 4) -> 
     base, extra = divmod(64, bands)
     widths = [base + 1] * extra + [base] * (bands - extra)
     offsets = [sum(widths[:i]) for i in range(bands)]
-    bands_arr = F.array(
+    band_keys = F.array(
         *[
             F.shiftrightunsigned(F.col("simhash"), off).bitwiseAND(F.lit((1 << w) - 1))
             for off, w in zip(offsets, widths)
         ]
     )
-    exploded = fps.select("id", "simhash", F.posexplode(bands_arr).alias("band", "key"))
-    a = exploded.select(F.col("id").alias("id_a"), F.col("simhash").alias("h_a"), "band", "key")
-    b = exploded.select(F.col("id").alias("id_b"), F.col("simhash").alias("h_b"), "band", "key")
-    ham = F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b")))
+    cand = banded_pairs(fps.select("id", _banded(band_keys).alias("keys"), "simhash"))
+    ham = F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
     return (
-        a.join(b, ["band", "key"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-        .withColumn("hamming", ham)
+        cand.withColumn("hamming", ham)
         .filter(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
     )

@@ -5,10 +5,14 @@
   candidates is one (batch x probes) matmul, emitting only each batch's
   local top-k per probe; a final window rank produces the global top-k.
   Shuffle volume is O(partitions * probes * k), never O(candidates).
-- cosine_topk_lsh: IVF/LSH scale path — random-hyperplane signatures
-  bucket candidates; probes search their own bucket (+ optional
-  multi-table OR), exact rerank inside buckets. Recall < 1 by design;
-  the brute-force path is the oracle.
+- cosine_topk_lsh / cosine_topk_ivf: scale paths — random-hyperplane
+  signatures or coarse-quantizer lists bucket candidates; probes search
+  their own buckets (multi-table OR / nprobe lists) through
+  `dedup.banded_pairs`, exact rerank inside buckets. Recall < 1 by
+  design; the brute-force path is the oracle.
+- embedding_near_dup_pairs: the hyperplane-LSH self join, exact verify.
+
+Every operator here reads the embeddings table's (vec_id, embedding).
 """
 
 from __future__ import annotations
@@ -20,29 +24,82 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from osmalyzer_spark.operators.dedup import _banded, banded_pairs
 
-def _collect_probes(probes: DataFrame, id_col: str, vec_col: str):
-    rows = probes.select(id_col, vec_col).collect()
-    ids = np.array([r[id_col] for r in rows])
-    mat = np.array([r[vec_col] for r in rows], dtype=np.float64)
+_ID_COL = "vec_id"
+_VEC_COL = "embedding"
+# hyperplane seeds and, for the near-dup self join, its plane and table
+# counts; the q23/q24 oracles embed the same values
+_TOPK_LSH_SEED = 11
+_NEAR_DUP_SEED = 13
+_NEAR_DUP_PLANES = 12
+_NEAR_DUP_TABLES = 4
+
+
+def _collect_probes(probes: DataFrame):
+    rows = probes.select(_ID_COL, _VEC_COL).collect()
+    ids = np.array([r[_ID_COL] for r in rows])
+    mat = np.array([r[_VEC_COL] for r in rows], dtype=np.float64)
     mat /= np.linalg.norm(mat, axis=1, keepdims=True)
     return ids, mat
+
+
+def _cosine(a: str, b: str):
+    """Exact cosine of two vector columns, summed in double."""
+
+    def dot(x: str, y: str):
+        return F.aggregate(
+            F.zip_with(x, y, lambda u, v: u.cast("double") * v.cast("double")),
+            F.lit(0.0),
+            lambda acc, t: acc + t,
+        )
+
+    return dot(a, b) / (F.sqrt(dot(a, a)) * F.sqrt(dot(b, b)))
+
+
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """The k best (probe_id, cand_id, cosine) rows per probe, ties to the
+    lower cand_id: (probe_id, cand_id, cosine rounded to 6, rank)."""
+    w = Window.partitionBy("probe_id").orderBy(F.col("cosine").desc(), F.col("cand_id").asc())
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("probe_id", "cand_id", F.round("cosine", 6).alias("cosine"), "rank")
+    )
+
+
+def _keyed(df: DataFrame, keys) -> DataFrame:
+    """`df` as a `banded_pairs` input: (id, keys, v)."""
+    return df.select(
+        F.col(_ID_COL).alias("id"), keys.alias("keys"), F.col(_VEC_COL).alias("v")
+    )
+
+
+def _probe_top_k(candidates, probes, cand_keys, probe_keys, k: int) -> DataFrame:
+    """Exact cosine top-k over the `banded_pairs` of probes against
+    candidates, each side bucketed by its own keys column."""
+    pairs = banded_pairs(_keyed(candidates, cand_keys), _keyed(probes, probe_keys))
+    return _top_k(
+        pairs.select(
+            F.col("id_a").alias("probe_id"),
+            F.col("id_b").alias("cand_id"),
+            _cosine("v_a", "v_b").alias("cosine"),
+        ),
+        k,
+    )
 
 
 def cosine_topk_bruteforce(
     candidates: DataFrame,
     probes: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    exclude_self: bool = True,
 ) -> DataFrame:
-    """Exact cosine top-k of each probe against all candidates.
+    """Exact cosine top-k of each probe against all other candidates.
 
     Output: (probe_id, cand_id, cosine, rank). Probe set must be
     driver-collectable (the usual ANN query shape); candidates stream.
     """
-    probe_ids, probe_mat = _collect_probes(probes, id_col, vec_col)
+    probe_ids, probe_mat = _collect_probes(probes)
 
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -52,9 +109,8 @@ def cosine_topk_bruteforce(
             mat = np.array(list(pdf["__cv"]), dtype=np.float64)
             mat /= np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
             cos = mat @ probe_mat.T  # (batch, n_probes)
-            if exclude_self:
-                same = cand_ids[:, None] == probe_ids[None, :]
-                cos = np.where(same, -np.inf, cos)
+            same = cand_ids[:, None] == probe_ids[None, :]
+            cos = np.where(same, -np.inf, cos)
             n_local = min(k, cos.shape[0])
             # local top-k per probe within this batch
             idx = np.argpartition(-cos, n_local - 1, axis=0)[:n_local]
@@ -67,14 +123,9 @@ def cosine_topk_bruteforce(
             yield res[np.isfinite(res["cosine"])]
 
     scored = candidates.select(
-        F.col(id_col).alias("__cid"), F.col(vec_col).alias("__cv")
+        F.col(_ID_COL).alias("__cid"), F.col(_VEC_COL).alias("__cv")
     ).mapInPandas(score, schema="probe_id long, cand_id long, cosine double")
-    w = Window.partitionBy("probe_id").orderBy(F.col("cosine").desc(), F.col("cand_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("probe_id", "cand_id", F.round("cosine", 6).alias("cosine"), "rank")
-    )
+    return _top_k(scored, k)
 
 
 # Quantization scale for hyperplane signatures: components become
@@ -117,46 +168,13 @@ def cosine_topk_lsh(
     candidates: DataFrame,
     probes: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_planes: int = 12,
     n_tables: int = 3,
-    seed: int = 11,
 ) -> DataFrame:
     """Approximate cosine top-k: multi-table hyperplane LSH buckets, exact
     rerank within colliding buckets. Output schema matches brute force."""
-
-    def with_sigs(df: DataFrame, prefix: str) -> DataFrame:
-        return df.select(
-            F.col(id_col).alias(f"{prefix}_id"),
-            F.col(vec_col).alias(f"{prefix}_v"),
-            F.posexplode(
-                hyperplane_signatures_col(vec_col, n_planes, n_tables, seed)
-            ).alias("table", "key"),
-        )
-
-    c = with_sigs(candidates, "cand")
-    p = with_sigs(probes, "probe")
-    dot = F.aggregate(
-        F.zip_with("probe_v", "cand_v", lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    norm = lambda col: F.sqrt(  # noqa: E731
-        F.aggregate(F.transform(col, lambda x: x.cast("double") * x.cast("double")), F.lit(0.0), lambda a, x: a + x)
-    )
-    pairs = (
-        c.join(F.broadcast(p), ["table", "key"])
-        .filter(F.col("probe_id") != F.col("cand_id"))
-        .dropDuplicates(["probe_id", "cand_id"])
-        .withColumn("cosine", dot / (norm(F.col("probe_v")) * norm(F.col("cand_v"))))
-    )
-    w = Window.partitionBy("probe_id").orderBy(F.col("cosine").desc(), F.col("cand_id").asc())
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("probe_id", "cand_id", F.round("cosine", 6).alias("cosine"), "rank")
-    )
+    keys = _banded(hyperplane_signatures_col(_VEC_COL, n_planes, n_tables, _TOPK_LSH_SEED))
+    return _probe_top_k(candidates, probes, keys, keys, k)
 
 
 def ivf_assignments_col(
@@ -183,8 +201,6 @@ def ivf_assignments_col(
 def kmeans_centroids(
     df: DataFrame,
     n_centroids: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_iter: int = 5,
     seed: int = 29,
 ) -> tuple[np.ndarray, np.ndarray]:
@@ -205,7 +221,7 @@ def kmeans_centroids(
     Returns (cent_ids = arange(n_centroids), cent_mat float64 (k, dim)).
     """
     seed_rows = (
-        df.select(F.col(id_col).alias("__id"), F.col(vec_col).alias("__v"))
+        df.select(F.col(_ID_COL).alias("__id"), F.col(_VEC_COL).alias("__v"))
         .withColumn("__h", F.xxhash64(F.col("__id"), F.lit(seed)))
         .orderBy("__h", "__id")
         .limit(n_centroids)
@@ -216,7 +232,7 @@ def kmeans_centroids(
             f"need >= {n_centroids} rows to seed k-means, got {len(seed_rows)}"
         )
     cent = np.array([r["__v"] for r in seed_rows], dtype=np.float64)
-    vecs = df.select(F.col(vec_col).alias("__v"))
+    vecs = df.select(F.col(_VEC_COL).alias("__v"))
 
     for _ in range(n_iter):
         c = cent  # bind current value into the closure
@@ -257,8 +273,6 @@ def kmeans_centroids(
 def kmeans_centroids_exact(
     df: DataFrame,
     n_centroids: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_iter: int = 3,
     hash_mult: int = 2654435761,
     hash_mod: int = 1000003,
@@ -286,7 +300,7 @@ def kmeans_centroids_exact(
     ivf_assignments_col with NO further quantization.
     """
     seed_rows = (
-        df.select(F.col(id_col).alias("__id"), F.col(vec_col).alias("__v"))
+        df.select(F.col(_ID_COL).alias("__id"), F.col(_VEC_COL).alias("__v"))
         .withColumn("__h", (F.col("__id") * F.lit(hash_mult)) % F.lit(hash_mod))
         .orderBy("__h", "__id")
         .limit(n_centroids)
@@ -299,7 +313,7 @@ def kmeans_centroids_exact(
     cent = np.floor(
         np.array([r["__v"] for r in seed_rows], dtype=np.float64) * QUANT
     ).astype(np.int64)
-    vecs = df.select(F.col(vec_col).alias("__v"))
+    vecs = df.select(F.col(_VEC_COL).alias("__v"))
 
     for _ in range(n_iter):
         c = cent.astype(np.float64)  # exact: |values| < 2**21
@@ -347,11 +361,8 @@ def cosine_topk_ivf(
     k: int = 10,
     n_centroids: int = 16,
     nprobe: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     centroids: str = "by_id",
     kmeans_iter: int = 5,
-    kmeans_seed: int = 29,
 ) -> DataFrame:
     """IVF ANN: coarse quantizer buckets + exact cosine rerank.
 
@@ -361,101 +372,51 @@ def cosine_topk_ivf(
     plain SQL. centroids="kmeans": seeded Lloyd's iterations
     (kmeans_centroids) — the production quantizer; recall vs brute force
     at equal nprobe is asserted in tests. Every other stage (broadcast
-    assignment matmul, inverted-list bucket join, exact rerank) is
-    identical between the two. Candidates land in their single nearest
-    list; probes search their nprobe nearest lists. Output schema
-    matches the brute-force/LSH paths: (probe_id, cand_id, cosine, rank).
+    assignment matmul, inverted-list bucket join through `banded_pairs`,
+    exact rerank) is identical between the two. Candidates land in their
+    single nearest list; probes search their nprobe nearest lists. Output
+    schema matches the brute-force/LSH paths: (probe_id, cand_id, cosine,
+    rank).
     """
     if centroids == "kmeans":
-        cent_ids, cent_mat = kmeans_centroids(
-            candidates, n_centroids, id_col, vec_col, kmeans_iter, kmeans_seed
-        )
+        cent_ids, cent_mat = kmeans_centroids(candidates, n_centroids, kmeans_iter)
         cent_q = np.floor(cent_mat * QUANT).astype(np.int64)
     elif centroids == "kmeans_exact":
         # integer-space Lloyd's (already quantized — see
         # kmeans_centroids_exact): the SQL-replayable production quantizer
-        cent_ids, cent_q = kmeans_centroids_exact(
-            candidates, n_centroids, id_col, vec_col, kmeans_iter
-        )
+        cent_ids, cent_q = kmeans_centroids_exact(candidates, n_centroids, kmeans_iter)
     elif centroids == "by_id":
         cent_rows = sorted(
-            candidates.filter(F.col(id_col) < n_centroids).select(id_col, vec_col).collect(),
-            key=lambda r: r[id_col],
+            candidates.filter(F.col(_ID_COL) < n_centroids).select(_ID_COL, _VEC_COL).collect(),
+            key=lambda r: r[_ID_COL],
         )
-        cent_ids = np.array([r[id_col] for r in cent_rows], dtype=np.int64)
+        cent_ids = np.array([r[_ID_COL] for r in cent_rows], dtype=np.int64)
         cent_q = np.floor(
-            np.array([r[vec_col] for r in cent_rows], dtype=np.float64) * QUANT
+            np.array([r[_VEC_COL] for r in cent_rows], dtype=np.float64) * QUANT
         ).astype(np.int64)
     else:
         raise ValueError(
             f"centroids must be 'by_id', 'kmeans' or 'kmeans_exact', got {centroids!r}"
         )
 
-    c = candidates.select(
-        F.col(id_col).alias("cand_id"),
-        F.col(vec_col).alias("cand_v"),
-        F.element_at(ivf_assignments_col(vec_col, cent_ids, cent_q, 1), 1).alias("cid"),
-    )
-    p = probes.select(
-        F.col(id_col).alias("probe_id"),
-        F.col(vec_col).alias("probe_v"),
-        F.explode(ivf_assignments_col(vec_col, cent_ids, cent_q, nprobe)).alias("cid"),
-    )
-    dot = F.aggregate(
-        F.zip_with("probe_v", "cand_v", lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    norm = lambda col: F.sqrt(  # noqa: E731
-        F.aggregate(F.transform(col, lambda x: x.cast("double") * x.cast("double")), F.lit(0.0), lambda a, x: a + x)
-    )
-    pairs = (
-        c.join(F.broadcast(p), "cid")
-        .filter(F.col("probe_id") != F.col("cand_id"))
-        .dropDuplicates(["probe_id", "cand_id"])
-        .withColumn("cosine", dot / (norm(F.col("probe_v")) * norm(F.col("cand_v"))))
-    )
-    w = Window.partitionBy("probe_id").orderBy(F.col("cosine").desc(), F.col("cand_id").asc())
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("probe_id", "cand_id", F.round("cosine", 6).alias("cosine"), "rank")
+    return _probe_top_k(
+        candidates,
+        probes,
+        ivf_assignments_col(_VEC_COL, cent_ids, cent_q, 1),
+        ivf_assignments_col(_VEC_COL, cent_ids, cent_q, nprobe),
+        k,
     )
 
 
-def embedding_near_dup_pairs(
-    df: DataFrame,
-    threshold: float = 0.98,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 12,
-    n_tables: int = 4,
-    seed: int = 13,
-) -> DataFrame:
+def embedding_near_dup_pairs(df: DataFrame, threshold: float = 0.98) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (dedup tier 4): LSH-bucketed
-    self-join, exact cosine verify >= threshold."""
-    e = df.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("v"),
-        F.posexplode(
-            hyperplane_signatures_col(vec_col, n_planes, n_tables, seed)
-        ).alias("table", "key"),
-    )
-    a = e.select(F.col("id").alias("id_a"), F.col("v").alias("v_a"), "table", "key")
-    b = e.select(F.col("id").alias("id_b"), F.col("v").alias("v_b"), "table", "key")
-    dot = F.aggregate(
-        F.zip_with("v_a", "v_b", lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    norm = lambda col: F.sqrt(  # noqa: E731
-        F.aggregate(F.transform(col, lambda x: x.cast("double") * x.cast("double")), F.lit(0.0), lambda a, x: a + x)
+    self-join through `banded_pairs`, exact cosine verify >= threshold."""
+    keys = hyperplane_signatures_col(
+        _VEC_COL, _NEAR_DUP_PLANES, _NEAR_DUP_TABLES, _NEAR_DUP_SEED
     )
     return (
-        a.join(b, ["table", "key"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-        .withColumn("cosine", dot / (norm(F.col("v_a")) * norm(F.col("v_b"))))
+        banded_pairs(_keyed(df, _banded(keys)))
+        .withColumn("cosine", _cosine("v_a", "v_b"))
         .filter(F.col("cosine") >= threshold)
         .select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
     )

@@ -1637,7 +1637,7 @@ _ORACLES: dict[str, str] = {
     # Brute-force O(n^2) ground truth for q22: recompute the md5-lower-64
     # count-weighted simhash per document in SQL, then bit_count(xor) over
     # the full pair join — verifies the banding path returns the COMPLETE
-    # hamming<=8 set.
+    # hamming<=3 set (4 bands, q22_simhash).
     "q22_simhash": """
         WITH toks AS (
           SELECT doc_id, md5_number_lower(w) AS h

@@ -114,22 +114,31 @@ def test_minhash_signature_estimates_jaccard(spark, docs):
         assert abs(true_j - est_j) < 0.18
 
 
-def test_simhash_identical_and_near(spark, docs):
-    fps = {r["id"]: r["simhash"] for r in simhash_fingerprints(docs, "doc_id", "text").collect()}
+@pytest.fixture(scope="module")
+def simhashes(spark, docs):
+    return {r["id"]: r["simhash"] for r in simhash_fingerprints(docs, "doc_id", "text").collect()}
+
+
+# (3, 4) is q22's setting; bands = max_hamming + 1 is the pigeonhole
+# boundary, and 64 bits over 5 or 7 bands gives uneven band widths
+@pytest.mark.parametrize("max_hamming, bands", [(3, 4), (4, 5), (6, 7), (3, 7)])
+def test_simhash_identical_and_near(spark, simhashes, max_hamming, bands):
+    fps = simhashes
     assert fps[20] == fps[200]  # identical text -> identical fingerprint
     pairs = simhash_near_pairs(
         spark.createDataFrame([(k, v) for k, v in fps.items()], "id long, simhash long"),
-        max_hamming=3,
+        max_hamming=max_hamming,
+        bands=bands,
     )
     got = {(r["id_a"], r["id_b"]): r["hamming"] for r in pairs.collect()}
     assert got[(20, 200)] == 0
-    # verify against brute force hamming <= 3
-    want = set()
-    ids = list(fps)
-    for a, b in itertools.combinations(sorted(ids), 2):
-        if bin(fps[a] ^ fps[b]).count("1") <= 3:
-            want.add((a, b))
-    assert set(got) == want
+    # verify against brute force hamming <= max_hamming
+    want = {}
+    for a, b in itertools.combinations(sorted(fps), 2):
+        ham = bin((fps[a] ^ fps[b]) & (2**64 - 1)).count("1")
+        if ham <= max_hamming:
+            want[(a, b)] = ham
+    assert got == want
 
 
 def test_connected_components(spark):

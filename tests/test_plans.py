@@ -103,3 +103,70 @@ def test_ivf_probe_side_broadcasts(spark):
     plan = plan_of(out)
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
+
+
+def _bucket_join_inputs(df) -> list[list[tuple[str, str]]]:
+    """(name, type) columns of each input of every join fed by an explode
+    in `df`'s optimized plan: the inputs of its bucket (candidate) joins."""
+
+    def children(node):
+        kids = node.children()
+        return [kids.apply(i) for i in range(kids.size())]
+
+    def fed_by_explode(node) -> bool:
+        while node.nodeName() != "Generate":
+            kids = children(node)
+            if len(kids) != 1 or node.nodeName() in ("Join", "Aggregate"):
+                return False
+            node = kids[0]
+        return True
+
+    def columns(node):
+        out = node.output()
+        return [
+            (out.apply(i).name(), out.apply(i).dataType().simpleString())
+            for i in range(out.size())
+        ]
+
+    inputs, todo = [], [df._jdf.queryExecution().optimizedPlan()]
+    while todo:
+        node = todo.pop()
+        kids = children(node)
+        if node.nodeName() == "Join" and any(fed_by_explode(k) for k in kids):
+            inputs += [columns(k) for k in kids]
+        todo += kids
+    return inputs
+
+
+@pytest.fixture(scope="module")
+def dedup_tables(spark, tmp_path_factory):
+    """documents and embeddings tables with the driver testdata's schema."""
+    import numpy as np
+
+    d = tmp_path_factory.mktemp("dedup_tables")
+    rng = np.random.default_rng(1)
+    spark.createDataFrame(
+        [(i, f"w{i % 7} w{i % 5} w{i % 3}") for i in range(30)],
+        "doc_id long, text string",
+    ).write.parquet(str(d / "documents.parquet"))
+    spark.createDataFrame(
+        [(i, [float(x) for x in rng.normal(size=64)], 0) for i in range(30)],
+        "vec_id long, embedding array<float>, label int",
+    ).write.parquet(str(d / "embeddings.parquet"))
+    return str(d)
+
+
+@pytest.mark.parametrize(
+    "query", ["q22_simhash", "q23_embedding_near_dup", "q24_cosine_lsh"]
+)
+def test_bucket_join_ships_ids_and_keys_only(spark, dedup_tables, query):
+    """The SimHash band join and the embedding LSH joins shuffle (or
+    broadcast) only (id, key) rows: the fingerprint and the embedding are
+    re-attached by id after the candidate pairs are deduplicated."""
+    from osmalyzer_spark.plans import driver_queries
+
+    inputs = _bucket_join_inputs(getattr(driver_queries, query)(spark, dedup_tables))
+    assert inputs
+    for cols in inputs:
+        assert len(cols) == 2, cols
+        assert not any(n == "simhash" or t.startswith("array") for n, t in cols), cols
