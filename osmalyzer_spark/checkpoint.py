@@ -22,26 +22,28 @@ a record that exists but cannot be read fails the run instead of
 passing for "nothing done yet". None of it starts a Spark job, and the
 data read-backs are given their recorded schema, so no read infers one.
 
-Crash safety: every data write uses DYNAMIC partition overwrite
-(`spark.sql.sources.partitionOverwriteMode=dynamic` + mode("overwrite")),
-so a bucket whose data landed but whose progress row did not is simply
-REPLACED on the rerun — resume never duplicates rows, no matter where
-the crash fell (verified by the crash-between-data-and-progress test).
+Crash safety: the checkpoint data write is a DYNAMIC partition overwrite
+(`.option("partitionOverwriteMode", "dynamic")` + mode("overwrite") on
+that one write; the session setting is left alone), so a bucket whose
+data landed but whose progress row did not is simply REPLACED on the
+rerun — resume never duplicates rows, no matter where the crash fell
+(verified by the crash-between-data-and-progress tests).
 
-Two execution paths:
+One commit path: `run_single_pass` is the only code that writes
+checkpoint data, observes rows_out, counts rows_in and writes progress.
+ONE job computes and writes every pending bucket, shuffle-partitioned
+by `__bucket`; that requires `process` to be bucket-distributive
+(row-local, or grouping only within keys that never straddle buckets —
+true for any per-cell operator, since buckets are unions of cells).
 
-- `run_single_pass` (the 100 TB path): ONE job computes and writes every
-  pending bucket, shuffle-partitioned by `__bucket` — the input is
-  scanned once for the output write plus once (column-pruned) for the
-  rows_in lineage counts. Requires `process` to be bucket-distributive
-  (row-local, or grouping only within keys that never straddle buckets
-  — true for any per-cell operator, since buckets are unions of cells).
-- `run` (per-bucket loop): for operators that must see exactly one
-  bucket per call — e.g. the correlator's distributed matching of one
-  giant component. This path filters the input once PER BUCKET; at
-  scale the input must be stored pre-partitioned by the bucket key
-  (`stage_bucketed`) so each filter is a partition-pruned read, not a
-  full scan.
+`run` adapts that path to operators that must see exactly one bucket
+per call — e.g. the correlator's distributed matching of one giant
+component: it commits the pending buckets in batches of
+`buckets_per_batch`, one `run_single_pass` per batch, whose `process`
+calls the caller's once per bucket of the batch and unions the outputs.
+Each call filters the input to one bucket; at scale the input must be
+stored pre-partitioned by the bucket key (`stage_bucketed`) so each
+filter is a partition-pruned read, not a full scan.
 
 This is deliberately a batch driver, not Structured Streaming — the
 reference is a daily batch job (its dated-cache incrementality,
@@ -57,6 +59,7 @@ import time
 import uuid
 from collections.abc import Callable
 from dataclasses import dataclass
+from functools import partial, reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -69,11 +72,6 @@ PROGRESS_SCHEMA = (
 _PROGRESS_COLUMNS = [c.split()[0] for c in PROGRESS_SCHEMA.split(", ")]
 # the bucket column `stage_bucketed` partitions a staged table by
 _STAGE_BUCKET = "__cbucket"
-
-
-def _dynamic_overwrite(spark: SparkSession):
-    """Ensure bucket-partition writes replace (not duplicate) reruns."""
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
 
 def _fs_path(spark: SparkSession, path: str):
@@ -293,10 +291,10 @@ class CheckpointedRun:
             .partitionBy(_STAGE_BUCKET)
             .parquet(path)
         )
-        # our own completion marker: dynamic partitionOverwriteMode (set
-        # session-wide by the run paths) suppresses the _SUCCESS file. An
-        # underscore-prefixed name is invisible to the parquet reader, so
-        # the marker can live inside the staged dir.
+        # our own completion marker, written after the data: unlike
+        # Hadoop's _SUCCESS it records what the staging was built from,
+        # which `staged` checks on reuse. An underscore-prefixed name is
+        # invisible to the parquet reader, so it can live in the staged dir.
         marker = {
             "run_id": self.run_id,
             "fingerprint": fingerprint,
@@ -306,6 +304,11 @@ class CheckpointedRun:
         _write_value(spark, json.dumps(marker, sort_keys=True), os.path.join(path, "_STAGED"))
         return self.staged(spark, name, fingerprint, df.schema)[0]
 
+    def _pending(self, spark: SparkSession, buckets: list[int] | None) -> list[int]:
+        universe = range(self.n_buckets) if buckets is None else buckets
+        done = self.done_buckets(spark)
+        return [b for b in universe if b not in done]
+
     def run_single_pass(
         self,
         spark: SparkSession,
@@ -313,10 +316,10 @@ class CheckpointedRun:
         process: Callable[[DataFrame], DataFrame],
         bucket_expr,
         input_snapshot: str = "",
-        fail_before_progress: bool = False,
         buckets: list[int] | None = None,
     ) -> DataFrame:
-        """Compute and write EVERY pending bucket in one job.
+        """Compute, write and commit EVERY pending bucket in one job — the
+        one commit path (`run` calls it once per batch).
 
         `process` receives the pending slice of the input with its
         `__bucket` column attached and must preserve that column on its
@@ -324,18 +327,17 @@ class CheckpointedRun:
         operators include it in their grouping keys — cells never
         straddle buckets, so this does not change semantics).
 
-        One full input scan for the output write + one column-pruned
-        scan for rows_in lineage. `fail_before_progress` is a test hook
-        simulating a crash in the data-written/progress-missing window.
-        `buckets` restricts the pass to an explicit bucket-id list
-        (default: range(n_buckets)) — used when a run splits bucket ids
-        between a single-pass phase and a per-bucket phase.
+        One input scan for the output write, with rows_out observed on
+        it, plus one column-pruned scan for the rows_in lineage counts;
+        then ONE progress record commits every pending bucket. `buckets`
+        restricts the pass to an explicit bucket-id list (default:
+        range(n_buckets)) — used when a run splits bucket ids between a
+        single-pass phase and a per-bucket phase.
+
+        Returns the complete output DataFrame (all buckets of run_id).
         """
-        _dynamic_overwrite(spark)
         inp = inp.withColumn("__bucket", bucket_expr.cast("int"))
-        done = self.done_buckets(spark)
-        universe = range(self.n_buckets) if buckets is None else buckets
-        pending = [b for b in universe if b not in done]
+        pending = self._pending(spark, buckets)
         if pending:
             t0 = time.time()
             slice_df = inp.filter(F.col("__bucket").isin(pending))
@@ -367,14 +369,15 @@ class CheckpointedRun:
                         for b in pending
                     ],
                 )
+            # dynamic overwrite replaces only the partitions written, so
+            # redoing a bucket after a crash is idempotent
             (
                 produced.repartition("__bucket")
                 .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
                 .partitionBy("__bucket")
                 .parquet(self._data_path)
             )
-            if fail_before_progress:
-                raise RuntimeError("simulated crash after data, before progress")
             # rows_in lineage: column-pruned aggregation, not a full rescan
             # (cannot be observed: process() may consume the slice through
             # several union branches, which would multi-count the metric)
@@ -431,84 +434,47 @@ class CheckpointedRun:
         bucket_expr,
         input_snapshot: str = "",
         fail_after_batches: int | None = None,
-        fail_before_progress_batch: int | None = None,
         buckets: list[int] | None = None,
     ) -> DataFrame:
-        """Process `inp` bucket by bucket in resumable batches.
+        """Process `inp` ONE BUCKET PER `process` CALL, in resumable batches.
 
         bucket_expr: Column -> int bucket in [0, n_buckets) — usually
-        pmod(cell_id or xxhash64(id), n_buckets). `process` maps a bucket
-        slice to its output (no `__bucket` column; it is attached here).
-        At scale, store the input pre-partitioned by the bucket key so
-        the per-bucket filter is a pruned read — this loop scans the
-        input once per bucket otherwise (use run_single_pass for
-        bucket-distributive work).
+        pmod(cell_id or xxhash64(id), n_buckets). `process` maps one
+        bucket's rows (no `__bucket` column; it is attached here) to its
+        output. The pending buckets are committed in batches of
+        `buckets_per_batch`: each batch is one `run_single_pass` whose
+        process filters the slice to each bucket of the batch, calls
+        `process` on it and unions the outputs — one write and one
+        progress record per batch. At scale, store the input
+        pre-partitioned by the bucket key (`stage_bucketed`) so each
+        per-bucket filter is a pruned read — otherwise every `process`
+        call scans the input.
 
-        `fail_after_batches` simulates a crash before a batch;
-        `fail_before_progress_batch` simulates one after a batch's data
-        writes but before its progress rows — the dangerous window.
+        `fail_after_batches=k` simulates a crash before batch k.
 
         Returns the complete output DataFrame (all buckets of run_id).
         """
-        _dynamic_overwrite(spark)
-        inp = inp.withColumn("__bucket", bucket_expr.cast("int"))
-        done = self.done_buckets(spark)
-        universe = range(self.n_buckets) if buckets is None else buckets
-        pending = [b for b in universe if b not in done]
-        batches = [
-            pending[i : i + self.buckets_per_batch]
-            for i in range(0, len(pending), self.buckets_per_batch)
-        ]
-        for bi, batch in enumerate(batches):
+
+        def per_bucket(batch: list[int], sl: DataFrame) -> DataFrame:
+            return reduce(
+                DataFrame.unionByName,
+                [
+                    process(sl.filter(F.col("__bucket") == b).drop("__bucket"))
+                    .withColumn("__bucket", F.lit(int(b)))
+                    for b in batch
+                ],
+            )
+
+        pending = self._pending(spark, buckets)
+        step = self.buckets_per_batch
+        for bi, i in enumerate(range(0, len(pending), step)):
             if fail_after_batches is not None and bi >= fail_after_batches:
                 raise RuntimeError(f"simulated crash before batch {bi}")
-            progress_rows = []
-            for b in batch:
-                t0 = time.time()
-                slice_df = inp.filter(F.col("__bucket") == b).persist()
-                rows_in = slice_df.count()
-                out = process(slice_df.drop("__bucket")).withColumn(
-                    "__bucket", F.lit(int(b))
-                )
-                self._write_schema_once(spark, out)
-                # rows_out rides the write job as an observed count (one
-                # consumer, so the metric is exact) instead of re-reading
-                # the partition just written
-                from pyspark.sql import Observation
-
-                obs_out = Observation()
-                out = out.observe(obs_out, F.count(F.lit(1)).alias("n"))
-                # dynamic overwrite: replaces ONLY partition __bucket=b,
-                # so redoing a bucket after a crash is idempotent
-                out.write.mode("overwrite").partitionBy("__bucket").parquet(
-                    self._data_path
-                )
-                try:
-                    rows_out = int(obs_out.get["n"] or 0)
-                except Exception:  # noqa: BLE001 — empty write, no
-                    # metrics row; the read-back scans nothing
-                    rows_out = (
-                        self._read_data(spark)
-                        .filter(F.col("__bucket") == b)
-                        .count()
-                    )
-                slice_df.unpersist()
-                progress_rows.append(
-                    (
-                        self.run_id,
-                        int(b),
-                        int(rows_in),
-                        int(rows_out),
-                        int((time.time() - t0) * 1000),
-                        input_snapshot,
-                        time.time(),
-                    )
-                )
-            if fail_before_progress_batch is not None and bi >= fail_before_progress_batch:
-                raise RuntimeError(
-                    f"simulated crash after batch {bi} data, before progress"
-                )
-            self._write_progress(spark, progress_rows)
+            batch = pending[i : i + step]
+            self.run_single_pass(
+                spark, inp, partial(per_bucket, batch), bucket_expr,
+                input_snapshot, buckets=batch,
+            )
         return self._result(spark)
 
     def metrics(self, spark: SparkSession) -> DataFrame:

@@ -983,7 +983,6 @@ def checkpointed_correlate(
     ck,
     input_snapshot: str = "",
     fail_after_batches: int | None = None,  # crash-simulation test hook (big phase)
-    fail_small_before_progress: bool = False,  # crash-simulation hook (small phase)
     phase_times: dict | None = None,  # filled with per-phase wall seconds
 ) -> DataFrame:
     """Resumable correlate with EXACT global semantics.
@@ -1124,7 +1123,6 @@ def checkpointed_correlate(
         bucket_expr=F.col("__cbucket"),
         input_snapshot=input_snapshot,
         buckets=list(range(ck.n_buckets)),
-        fail_before_progress=fail_small_before_progress,
     )
     pt["small_pass_s"] = round(time.time() - t0, 2)
 

@@ -416,11 +416,13 @@ def test_checkpointed_correlate_crash_resume_small_phase(spark, tmp_path):
     params = CorrelatorParams(match_distance=15, unmatch_distance=75)
     expected = _corr_rows(correlate(spark, edf, idf, params).correlations)
 
+    def crash(self, spark, rows):
+        raise RuntimeError("simulated crash after data, before progress")
+
     ck = CheckpointedRun(str(tmp_path / "ckr"), run_id="cc2", n_buckets=4, buckets_per_batch=1)
-    with _pytest.raises(RuntimeError, match="simulated crash"):
-        checkpointed_correlate(
-            spark, edf, idf, params, ck, fail_small_before_progress=True
-        )
+    with _pytest.MonkeyPatch.context() as mp, _pytest.raises(RuntimeError, match="simulated crash"):
+        mp.setattr(CheckpointedRun, "_write_progress", crash)
+        checkpointed_correlate(spark, edf, idf, params, ck)
     assert len(ck.done_buckets(spark)) == 0
     got = _corr_rows(checkpointed_correlate(spark, edf, idf, params, ck))
     assert got == expected
@@ -530,8 +532,10 @@ def test_checkpointed_correlate_partition_pruned_reads(spark, tmp_path):
     pruned directory reads (VERDICT r2 item 3): both sides are written
     under staged/<name>/__cbucket=<b>/, and a per-bucket filter's physical
     plan carries a PartitionFilters entry on __cbucket — one source scan
-    of exactly that bucket's files, not a rescan of the input."""
+    of exactly that bucket's files, not a rescan of the input. The
+    per-bucket slices `run` hands to `process` carry the same pruning."""
     import os
+    import re
 
     from osmalyzer_spark.checkpoint import CheckpointedRun
     from osmalyzer_spark.operators.correlator import checkpointed_correlate
@@ -555,6 +559,21 @@ def test_checkpointed_correlate_partition_pruned_reads(spark, tmp_path):
     # partition filter IS the whole predicate, i.e. one bucket's files
     assert "__cbucket" in pf and "= 1" in pf, plan
     assert "Filter (" not in plan.split("FileScan")[0], plan
+
+    # the per-bucket slice `run` hands to `process` prunes the same way:
+    # each call's PartitionFilters hold its own bucket equality
+    eqs = []
+
+    def capture(df):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        pf = plan.split("PartitionFilters", 1)[1].split("]", 1)[0]
+        eqs.append(re.findall(r"__cbucket#\d+ = (\d+)\)", pf))
+        return df.select("__side")
+
+    CheckpointedRun(str(tmp_path / "ckq"), run_id="p2", n_buckets=4, buckets_per_batch=4).run(
+        spark, staged, capture, bucket_expr=F.col("__cbucket")
+    )
+    assert eqs == [["0"], ["1"], ["2"], ["3"]], eqs
 
 
 def test_stage_bucketed_reused_on_resume(spark, tmp_path):

@@ -88,10 +88,49 @@ def _process(df):
     return df.withColumn("out_val", F.col("val") * 2)
 
 
+def _crash_progress(mp, commits_before=0):
+    """Make `_write_progress` raise after `commits_before` real commits:
+    the data-written, progress-missing crash window."""
+    real = CheckpointedRun._write_progress
+    calls = []
+
+    def write_progress(self, spark, rows):
+        calls.append(rows)
+        if len(calls) > commits_before:
+            raise RuntimeError("simulated crash after data, before progress")
+        real(self, spark, rows)
+
+    mp.setattr(CheckpointedRun, "_write_progress", write_progress)
+
+
 def test_checkpoint_complete_run(spark, tmp_out):
+    """`run` calls `process` once per bucket with exactly that bucket's
+    rows, and commits one progress record per batch of buckets."""
+    import os
+    from functools import reduce
+
+    expr = F.pmod(F.xxhash64("id"), F.lit(8))
+    calls = []
+
+    def process(df):
+        calls.append(df)
+        return _process(df)
+
     ck = CheckpointedRun(tmp_out, run_id="r1", n_buckets=8, buckets_per_batch=4)
-    out = ck.run(spark, _inp(spark), _process, bucket_expr=F.pmod(F.xxhash64("id"), F.lit(8)))
+    out = ck.run(spark, _inp(spark), process, bucket_expr=expr)
     assert out.count() == 1000
+    assert len(calls) == 8
+    assert all("__bucket" not in df.columns for df in calls)
+    # per call: the set of bucket ids its rows hash to, and its row count
+    seen = reduce(
+        lambda a, b: a.unionByName(b),
+        [df.select(F.lit(i).alias("call"), expr.alias("b")) for i, df in enumerate(calls)],
+    ).groupBy("call").agg(F.collect_set("b").alias("bs"), F.count(F.lit(1)).alias("n"))
+    want = dict(_inp(spark).groupBy(expr.alias("b")).count().collect())
+    got = {r["bs"][0]: r["n"] for r in seen.collect() if len(r["bs"]) == 1}
+    assert got == want and len(want) == 8
+    records = [f for f in os.listdir(os.path.join(tmp_out, "_progress")) if f.startswith("part-")]
+    assert len(records) == 2
     m = ck.metrics(spark)
     assert m.count() == 8
     assert m.agg(F.sum("rows_in")).first()[0] == 1000
@@ -127,8 +166,9 @@ def test_checkpoint_crash_between_data_and_progress_no_duplicates(spark, tmp_out
     (dynamic overwrite), not append a second copy."""
     ck = CheckpointedRun(tmp_out, run_id="r3", n_buckets=8, buckets_per_batch=2)
     expr = F.pmod(F.xxhash64("id"), F.lit(8))
-    with pytest.raises(RuntimeError, match="before progress"):
-        ck.run(spark, _inp(spark), _process, bucket_expr=expr, fail_before_progress_batch=1)
+    with pytest.MonkeyPatch.context() as mp, pytest.raises(RuntimeError, match="before progress"):
+        _crash_progress(mp, commits_before=1)
+        ck.run(spark, _inp(spark), _process, bucket_expr=expr)
     # batch 0 fully committed; batch 1's data written but unacknowledged
     assert len(ck.done_buckets(spark)) == 2
     out = ck.run(spark, _inp(spark), _process, bucket_expr=expr)
@@ -154,16 +194,40 @@ def test_checkpoint_single_pass_crash_window_resume(spark, tmp_out):
     rewrites every unacknowledged bucket; counts stay exact."""
     ck = CheckpointedRun(tmp_out, run_id="sp2", n_buckets=8)
     expr = F.pmod(F.xxhash64("id"), F.lit(8))
-    with pytest.raises(RuntimeError, match="before progress"):
-        ck.run_single_pass(
-            spark, _inp(spark), _process, bucket_expr=expr, fail_before_progress=True
-        )
+    with pytest.MonkeyPatch.context() as mp, pytest.raises(RuntimeError, match="before progress"):
+        _crash_progress(mp)
+        ck.run_single_pass(spark, _inp(spark), _process, bucket_expr=expr)
     assert len(ck.done_buckets(spark)) == 0
     out = ck.run_single_pass(spark, _inp(spark), _process, bucket_expr=expr)
     assert out.count() == 1000
     assert sorted(out.select("id").toPandas()["id"]) == list(range(1000))
     fresh = _process(_inp(spark).withColumn("__bucket", expr.cast("int"))).drop("__bucket")
     assert out.exceptAll(fresh).count() == 0 and fresh.exceptAll(out).count() == 0
+
+
+def test_checkpoint_leaves_session_overwrite_mode(spark, tmp_out):
+    """Dynamic partition overwrite is an option of the checkpoint data
+    write, not a session setting: `run_single_pass` and `run` leave the
+    session value as it was, and a `stage_bucketed` after them still
+    replaces its whole directory, dropping a partition its input lacks."""
+    import os
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    expr = F.pmod(F.xxhash64("id"), F.lit(8))
+    sp = CheckpointedRun(os.path.join(tmp_out, "sp"), run_id="ow1", n_buckets=8)
+    sp.run_single_pass(spark, _inp(spark), _process, bucket_expr=expr)
+    assert spark.conf.get(key) == before
+    ck = CheckpointedRun(tmp_out, run_id="ow2", n_buckets=8, buckets_per_batch=8)
+    ck.run(spark, _inp(spark), _process, bucket_expr=expr)
+    assert spark.conf.get(key) == before
+
+    # an unmarked staging directory holding a partition the input lacks
+    path = os.path.join(tmp_out, "staged", "ow2", "side")
+    spark.range(3).withColumn("__cbucket", F.lit(5)).write.partitionBy("__cbucket").parquet(path)
+    df = spark.range(4).withColumn("__cbucket", (F.col("id") % 2).cast("int"))
+    assert ck.stage_bucketed(spark, df, "side").count() == 4
+    assert "__cbucket=5" not in os.listdir(path)
 
 
 def _garble(path):
