@@ -37,7 +37,7 @@ by `__bucket`; that requires `process` to be bucket-distributive
 true for any per-cell operator, since buckets are unions of cells).
 
 `run` adapts that path to operators that must see exactly one bucket
-per call — e.g. the correlator's distributed matching of one giant
+per call — e.g. the correlator's one-task matching of one giant
 component: it commits the pending buckets in batches of
 `buckets_per_batch`, one `run_single_pass` per batch, whose `process`
 calls the caller's once per bucket of the batch and unions the outputs.

@@ -102,12 +102,14 @@ class CorrelatorParams:
     report_outside_polygon: bool = True
     salt: SaltSpec | None = None
     max_rounds: int = 64
-    # the one bound on pairs a single process solves: candidate tables
-    # at or below this row count are solved by the driver-local
-    # Gale-Shapley (same discipline as the CC local-edge gate: a bounded
-    # ~30 MB collect replaces per-round job latency), and
-    # checkpointed_correlate's components at or below it by the
-    # grouped-map solver; 0 forces the distributed round loop everywhere
+    # the one row bound on candidate pairs: correlate()'s candidate
+    # tables at or below it are solved by the driver-local Gale-Shapley
+    # (same discipline as the CC local-edge gate: a bounded ~30 MB
+    # collect replaces per-round job latency), and checkpointed_correlate
+    # gives each component above it a bucket of its own. 0 forces
+    # correlate()'s distributed round loop and makes every pair-bearing
+    # component of checkpointed_correlate big (each is still solved in
+    # one task, by the grouped-map solver)
     da_local_pair_threshold: int = 300_000
 
     @property
@@ -874,8 +876,8 @@ def _stage_corr_input(
     t_sizes = time.time()
 
     # split components by WORK size (candidate-pair count, the matching
-    # cost driver) at the one single-process bound; the big list is tiny
-    # and deterministic, so bucket ids n_buckets+rank are stable across
+    # cost driver) at the row bound; the big list is tiny and
+    # deterministic, so bucket ids n_buckets+rank are stable across
     # crash/resume recomputation. The join + aggregate are node/pair-
     # sized — pin them to the same data-proportional partitioning the
     # star rounds used, not the cluster-sized session default.
@@ -998,7 +1000,7 @@ def checkpointed_correlate(
     dense giant):
 
     - SMALL components (candidate pairs <= `da_local_pair_threshold`,
-      the one bound on pairs a single process solves) are solved inside
+      the row bound that splits the phases) are solved inside
       single Arrow tasks — a grouped applyInPandas whose one vectorized
       solver call covers every component of its group — and written for
       ALL pending hash buckets in ONE single-pass job. Wall time no
@@ -1006,12 +1008,9 @@ def checkpointed_correlate(
       candidate-less singletons don't even enter the grouped map
       (native expressions).
     - Each LARGE component gets its own dedicated bucket id
-      (n_buckets + rank) and runs `_assign`, so its matching takes the
-      distributed DA loop — the only place per-round driver latency is
-      still paid, reserved for the handful of Riga-hotspot-style giants
-      that are genuinely one big matching problem. (`_assign` gates on
-      the forward candidates only, so a giant whose extra pairs serve
-      only the lone upgrade can still solve at the driver.)
+      (n_buckets + rank), one `ck.run` `process` call per giant, and is
+      solved as ONE Arrow group by the same vectorized solver — one task,
+      no per-round driver latency and no distributed DA loop.
 
     Both phases share one staged slim input (elements/items/pairs rows
     partitioned by bucket — every per-bucket read is partition-pruned)
@@ -1100,7 +1099,9 @@ def checkpointed_correlate(
         # call (its own Arrow round-trip), so a fixed high count makes
         # small inputs pay ~1000 near-empty calls; target ~25k candidate
         # pairs per group, floored at 4x parallelism for wave balance
-        # and capped so a group never exceeds the small-component bound
+        # and capped at 65536 groups. Nothing caps one group's size: each
+        # component in it is at most the small-component bound, but hash
+        # collisions can put several near-bound components in one group
         n_groups = max(
             spark.sparkContext.defaultParallelism * 4,
             min(65536, -(-n_pairs_all // 25_000)),
@@ -1126,18 +1127,18 @@ def checkpointed_correlate(
     )
     pt["small_pass_s"] = round(time.time() - t0, 2)
 
-    # phase B: each giant component = one dedicated bucket through the
-    # distributed DA loop (few of these by construction)
+    # phase B: each giant component = one dedicated bucket and one
+    # `process` call of `ck.run` (few of these by construction), solved
+    # as one Arrow group by phase A's solver
     t0 = time.time()
     if big_buckets:
 
         def process_big(df: DataFrame) -> DataFrame:
-            eb = df.filter(F.col("__side") == "e").select("elem_id", "__lone")
-            ib = df.filter(F.col("__side") == "i").select("item_id", "__outside")
-            pb = df.filter(F.col("__side") == "p").select(
-                "item_id", "elem_id", "strength", "dist_m"
+            return (
+                df.withColumn("__bucket", F.col("__cbucket"))
+                .groupBy("__cbucket")
+                .applyInPandas(solver, _CORR_OUT_SCHEMA)
             )
-            return _assign(spark, eb, ib, pb, p).correlations
 
         result = ck.run(
             spark,

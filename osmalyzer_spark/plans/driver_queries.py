@@ -2116,7 +2116,7 @@ _ORACLES["q36_ivf_kmeans"] = _ivf_kmeans_oracle_sql(
 # item 2). Same inputs/params/oracle as q27: candidate-graph components
 # are an exact decomposition of the DA fixed point, so the
 # component-bucketed resumable path (staging + star CC + Arrow-batched
-# small-component solver + distributed giant-component DA) must reproduce
+# small-component solver + one-task giant-component solve) must reproduce
 # the global matching row-for-row. Checkpoint state goes to a fresh temp
 # dir per invocation — the query gates the full staging/CC/solver/merge
 # sandwich, not resume (pytest covers crash/resume separately).

@@ -430,10 +430,10 @@ def test_checkpointed_correlate_crash_resume_small_phase(spark, tmp_path):
 
 def test_checkpointed_correlate_crash_resume_big_phase(spark, tmp_path):
     """da_local_pair_threshold=0 forces every pair-bearing component
-    through the distributed big-component phase (one dedicated bucket
-    each). Crash after 2 big buckets; done = all 4 small buckets (phase A)
+    through the big-component phase (one dedicated bucket each).
+    Crash after 2 big buckets; done = all 4 small buckets (phase A)
     + 2 big; the resumed run completes the rest and equals the global
-    answer. Also proves the big-path _assign on slim staged rows, and
+    answer. Also proves the big-path one-task solve on slim staged rows, and
     that the resume reuses the staged layout: connected components raise
     if called, yet the answer and the big-component count are unchanged."""
     import dataclasses
@@ -474,15 +474,18 @@ def test_checkpointed_correlate_crash_resume_big_phase(spark, tmp_path):
     assert resume_pt["n_big_components"] == crash_pt["n_big_components"] == 12
 
 
-def test_checkpointed_correlate_splits_at_pair_threshold(spark, tmp_path):
+def test_checkpointed_correlate_splits_at_pair_threshold(spark, tmp_path, monkeypatch):
     """One bound splits the phases: components with more candidate pairs
     than da_local_pair_threshold get their own big bucket, the rest go
     through the grouped-map solver. Eleven clusters 3 km apart, each a
     complete candidate graph of n_e x n_i pairs (every point within 20 m
     of its centre): three clusters of 9 or 12 pairs sit above a bound of
-    6, eight of 1-6 pairs at or below it, and the answer is correlate()'s."""
+    6, eight of 1-6 pairs at or below it, and the answer is correlate()'s.
+    Each giant is solved in one task: the distributed DA loop raises if
+    it runs."""
     import dataclasses
 
+    import osmalyzer_spark.operators.correlator as correlator
     from osmalyzer_spark.checkpoint import CheckpointedRun
     from osmalyzer_spark.operators.correlator import checkpointed_correlate
 
@@ -501,6 +504,10 @@ def test_checkpointed_correlate_splits_at_pair_threshold(spark, tmp_path):
     params = CorrelatorParams(match_distance=15, unmatch_distance=75)
     expected = _corr_rows(correlate(spark, edf, idf, params).correlations)
 
+    def no_rounds(*a, **kw):
+        raise AssertionError("a giant took the distributed DA loop")
+
+    monkeypatch.setattr(correlator, "_da_rounds", no_rounds)
     ck = CheckpointedRun(str(tmp_path / "cks"), run_id="t1", n_buckets=4)
     pt = {}
     got = _corr_rows(checkpointed_correlate(
@@ -740,7 +747,11 @@ def test_checkpointed_grouped_map_solver_full_semantics(spark, tmp_path):
     pass. ~100 dense clusters spaced far beyond the seek distance give
     every Arrow group many components, each with contested elements and
     displacement chains; Good pairs between 75 m and the 175 m seek
-    distance can only match through the lone upgrade."""
+    distance can only match through the lone upgrade. A second run with
+    a small da_local_pair_threshold sends some clusters through phase
+    B's one-task path and must give the same rows."""
+    import dataclasses
+
     from osmalyzer_spark.checkpoint import CheckpointedRun
     from osmalyzer_spark.operators.correlator import (
         KIND_LONE_OSM, KIND_MATCHED, KIND_MATCHED_FAR, KIND_UNMATCHED_ITEM,
@@ -798,3 +809,18 @@ def test_checkpointed_grouped_map_solver_full_semantics(spark, tmp_path):
         KIND_UNMATCHED_OSM, KIND_LONE_OSM,
     }
     assert any(r[4] == GOOD and r[3] > 75 for r in got)
+
+    # a bound of 25 pairs makes four clusters giants: phase B solves each
+    # in one task with the same solver, lone upgrade included
+    ck2 = CheckpointedRun(str(tmp_path / "ckg2"), run_id="g2", n_buckets=8)
+    pt = {}
+    got2 = _corr_rows(checkpointed_correlate(
+        spark, edf, idf, dataclasses.replace(params, da_local_pair_threshold=25),
+        ck2, phase_times=pt,
+    ))
+    assert got2 == expected
+    assert pt["n_big_components"] == 4
+    big = _corr_rows(ck2._read_data(spark).filter(F.col("__bucket") >= 8).drop("__bucket"))
+    assert KIND_LONE_OSM in {r[0] for r in big}
+    assert any(r[4] == STRONG for r in big)
+    assert any(r[4] == GOOD and r[3] > 75 for r in big)

@@ -1,9 +1,10 @@
 """Checkpointed-correlate scaling probe (round 4).
 
 Measures the two-phase checkpointed_correlate (grouped-map small
-components + distributed DA for giants) end-to-end on the same 1M-row
-images table as tools/bench_scaling.py, at two parallelism levels in
-fresh JVMs, with the same in-run software-clock calibration.
+components + one dedicated bucket per giant, each solved in one task)
+end-to-end on the same 1M-row images table as tools/bench_scaling.py,
+at two parallelism levels in fresh JVMs, with the same in-run
+software-clock calibration.
 
 Reported per leg: total wall, component structure (count of small/big),
 and throughput (input rows/s); parent reports raw + clock-normalized
